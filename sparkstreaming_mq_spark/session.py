@@ -41,15 +41,24 @@ ENGINE_CONF: dict[str, str] = {
     # stateful streaming disables AQE so nothing coalesces them. On a
     # real cluster the deployer overrides this to ~2-3× total cores.
     "spark.sql.shuffle.partitions": "32",
+    # Python workers fork from pydaemon, which stops every task from
+    # re-reading pyspark.zip's directory (~0.25 CPU-s per task on
+    # CPython < 3.13). Static: read once, when the SparkContext starts.
+    "spark.python.daemon.module": "sparkstreaming_mq_spark.pydaemon",
 }
 
 # Subset of ENGINE_CONF that is runtime-settable on an existing session —
 # needed because the driver harness passes us ITS SparkSession, built
 # without our builder. Excludes spark.sql.shuffle.partitions: that knob is
 # sized per-caller (builder arg, conftest, check_oracle) and re-applying it
-# on every load_table would silently undo those choices.
+# on every load_table would silently undo those choices. Excludes
+# spark.python.daemon.module: a static core conf, so setting it would be
+# a failing py4j round-trip on every load_table. Sessions built outside
+# get_spark therefore run the stock pyspark.daemon.
 RUNTIME_CONF: dict[str, str] = {
-    k: v for k, v in ENGINE_CONF.items() if k != "spark.sql.shuffle.partitions"
+    k: v
+    for k, v in ENGINE_CONF.items()
+    if k not in ("spark.sql.shuffle.partitions", "spark.python.daemon.module")
 }
 
 
@@ -86,6 +95,11 @@ def get_spark(
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if master.startswith("local"):
+        # the worker daemon imports this package from any driver cwd and
+        # before any pyFile is shipped; cluster executors need it installed
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.config("spark.executorEnv.PYTHONPATH", root)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
