@@ -11,9 +11,19 @@ cores (or leaves AQE's coalescing to shrink an intentionally high value).
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # Config every session gets, cluster or local. AQE is the load-bearing
 # piece at scale: runtime partition coalescing, skew-join splitting and
@@ -72,6 +82,57 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# Hadoop's local FileContext starts a process per checkpoint file when
+# native libhadoop is absent (chmod on create/mkdir, readlink on rename);
+# NioLocalFs does the same file operations in-process. Local masters
+# only: the class must be on the driver JVM's classpath, and a session
+# built without it must never carry this key (ClassNotFoundException on
+# every checkpoint), which is why it is absent from ENGINE_CONF.
+NIO_LOCAL_FS_KEY = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+NIO_LOCAL_FS_CLASS = "sparkstreaming_mq_spark.jvm.NioLocalFs"
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+
+
+@functools.lru_cache(maxsize=None)
+def nio_local_fs_jar() -> str | None:
+    """Path of the compiled NioLocalFs jar, built once per source hash
+    into ``jvm/.build``; None (after one warning) when it cannot be
+    built, and the session keeps Hadoop's stock LocalFs."""
+    src = os.path.join(_JVM_DIR, "NioLocalFs.java")
+    with open(src, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    jar = os.path.join(_JVM_DIR, ".build", f"NioLocalFs-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    javac = shutil.which("javac")
+    if javac is None:
+        log.warning("javac not found: streaming checkpoints use Hadoop's stock LocalFs")
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars", "*")
+    try:
+        os.makedirs(os.path.dirname(jar), exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=os.path.dirname(jar)) as out:
+            subprocess.run(
+                [javac, "-J-XX:TieredStopAtLevel=1", "--release", "17", "-nowarn",
+                 "-cp", jars, "-d", out, src],
+                check=True, capture_output=True, text=True,
+            )
+            tmp = os.path.join(out, "classes.jar")
+            with zipfile.ZipFile(tmp, "w") as z:
+                for cls in glob.glob(os.path.join(out, "**", "*.class"), recursive=True):
+                    z.write(cls, os.path.relpath(cls, out))
+            os.replace(tmp, jar)  # atomic; concurrent compiles write the same bytes
+    except (OSError, subprocess.CalledProcessError) as e:
+        log.warning(
+            "NioLocalFs not built (%s): streaming checkpoints use Hadoop's stock LocalFs",
+            getattr(e, "stderr", None) or e,
+        )
+        return None
+    return jar
+
+
 def get_spark(
     app_name: str = "sparkstreaming-mq-spark",
     master: str | None = None,
@@ -95,12 +156,18 @@ def get_spark(
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    conf = dict(extra_conf or {})
     if master.startswith("local"):
         # the worker daemon imports this package from any driver cwd and
         # before any pyFile is shipped; cluster executors need it installed
         root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         builder = builder.config("spark.executorEnv.PYTHONPATH", root)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+        # local executors share the driver JVM and its classpath
+        jar = nio_local_fs_jar()
+        if jar is not None:
+            builder = builder.config(NIO_LOCAL_FS_KEY, NIO_LOCAL_FS_CLASS)
+            cp = conf.get("spark.driver.extraClassPath")
+            conf["spark.driver.extraClassPath"] = os.pathsep.join(filter(None, (cp, jar)))
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -3022,20 +3022,11 @@ def s19_stream_gapfill(
     # 19.6-35.8 s vs 8-16 parts at 8.4-16.2 s (medians). Size the
     # count to the input instead: ~12.5k events per state partition,
     # clamped to [4, 32] — sf0.1 -> 8, the 10x corpus -> 32 (both
-    # regimes keep their measured winner). Env override for ladders;
-    # a real cluster sizes this to its parallelism before first run
-    # (frozen into the checkpoint).
-    import os as _s19_os
-
+    # regimes keep their measured winner). A real cluster sizes this to
+    # its parallelism before first run (frozen into the checkpoint).
     from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
 
-    _parts_env = _s19_os.environ.get("SPARK_GRAFT_S19_PARTS")
-    if _parts_env is not None:
-        S19_STATE_PARTITIONS = int(_parts_env)
-    else:
-        S19_STATE_PARTITIONS = min(
-            32, max(4, _rowcount(sf_dir, "events") // 12_500)
-        )
+    S19_STATE_PARTITIONS = min(32, max(4, _rowcount(sf_dir, "events") // 12_500))
 
     US_HOUR = 3_600_000_000
     NO_PREV = -1  # sentinel: no closed hour in state yet
@@ -4490,14 +4481,10 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4p 8.6 s, 8p 11.7 s; 10x corpus 2p 36.7 s, 32p 14.9 s — the
     # 25k-events-per-partition divisor keeps both regimes on their
     # measured winner. Emission is partition-count-invariant, so the
-    # oracle is unchanged.
-    import os as _s21_os
-
+    # oracle is unchanged. The floor of 4 re-measured at sf0.01 once
+    # checkpoint files stopped forking chmod/readlink (4 vCPUs, warm
+    # medians of 4): 2p 2.00 s, 4p 1.99 s — a tie.
     from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
 
-    _parts_env = _s21_os.environ.get("SPARK_GRAFT_S21_PARTS")
-    if _parts_env is not None:
-        s21_parts = int(_parts_env)
-    else:
-        s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
+    s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
     return run_stream_to_table(res, "append", state_partitions=s21_parts)

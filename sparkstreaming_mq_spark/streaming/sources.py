@@ -251,6 +251,10 @@ def read_docs_stream_chunked(
 # operators that keep this default were re-measured without that tax
 # (sf0.01, 4 vCPUs, warm medians of 4, 2 vs 4 partitions): t7 2.30 vs
 # 2.45 s, s14 1.70 vs 1.85 s, t17 1.58 vs 1.57 s, t22 1.76 vs 2.07 s.
+# Re-measured once checkpoint files stopped forking chmod/readlink per
+# file (session.NIO_LOCAL_FS_KEY), same protocol: t2 1.02 vs 1.07 s,
+# t7 2.32 vs 2.32 s, s14 2.20 vs 2.20 s, t17 1.94 vs 1.68 s, t22 1.33
+# vs 1.59 s. 2 still wins or ties except on t17.
 STREAM_SHUFFLE_PARTITIONS = 2
 
 

@@ -75,3 +75,15 @@ def test_guard_catches_seeded_duplicate() -> None:
     bindings = _const_bindings(seeded)
     assert bindings["IVF_NPROBE"] == [1, 5]
     assert "LOCAL_OK" not in bindings, "function-local names must not count"
+
+
+def test_no_hadoop_conf_reaches_sessions_built_elsewhere() -> None:
+    """``apply_runtime_conf`` runs on sessions the engine did not build,
+    and ENGINE_CONF also on cluster masters; neither has the NioLocalFs
+    jar on its classpath, so a ``spark.hadoop.*`` key naming it would
+    fail every checkpoint with ClassNotFoundException. Only get_spark's
+    local branch may set it, next to the jar."""
+    from sparkstreaming_mq_spark import session
+
+    for conf in (session.RUNTIME_CONF, session.ENGINE_CONF):
+        assert not [k for k in conf if k.startswith("spark.hadoop.")], conf
