@@ -24,12 +24,19 @@ from pyspark.sql import functions as F
 
 from sparkstreaming_mq_spark.registry import query
 from sparkstreaming_mq_spark.streaming.sources import (
+    STREAM_SHUFFLE_PARTITIONS,
     read_docs_stream_chunked,
     read_events_stream,
     read_events_stream_chunked,
     run_stream_foreach_batch,
     run_stream_to_parquet,
     run_stream_to_table,
+)
+from sparkstreaming_mq_spark.streaming.shard_state import (
+    STATE_SCHEMA,
+    pack_state,
+    partition_shard,
+    unpack_state,
 )
 from sparkstreaming_mq_spark.tables import load_table
 
@@ -940,23 +947,15 @@ def t7_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def sessionize(key, pdf_iter, state: GroupState):
-        # SHARD-keyed state (r14, the t22/s21/s19 layout): one state
-        # group per hash shard holding every shard user's four session
-        # scalars as parallel arrays. Keying by user_id paid one python
-        # call + one state ser/de per user per batch (~15k groups at
-        # sf0.1; r14 profile: 13.4 s wall, 21.4 s task runTime, 0.9 s
-        # JVM cpu — ~96 % group-overhead wait). The shard kernel walks
-        # the same rows per user in the same ts order through the
-        # identical per-event state machine (same math.floor float
-        # arithmetic, same integer cent adds), so the emitted sessions
-        # — and the full oracle — are unchanged.
+        # one group per state partition (shard_state): the per-user
+        # state machine below sees each user's rows in the same ts order
         import math
 
         (_shard,) = key
         su: dict[int, list] = {}  # uid -> [start, last, n, cents]
         if state.exists:
-            uids_a, st_a, la_a, n_a, c_a = state.get
-            for u_id, s0, l0, n0, c0 in zip(uids_a, st_a, la_a, n_a, c_a):
+            cols = (a.tolist() for a in unpack_state(state.get[0]))
+            for u_id, s0, l0, n0, c0 in zip(*cols):
                 su[u_id] = [s0, l0, n0, c0]
         closed: list[tuple] = []
         # Concatenate BEFORE sorting: the iterator yields the group's
@@ -987,13 +986,7 @@ def t7_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 st[3] = cents + int(math.floor(float(val) * 100 + 0.5))
         uids_o = sorted(su)
         state.update(
-            (
-                uids_o,
-                [su[u][0] for u in uids_o],
-                [su[u][1] for u in uids_o],
-                [su[u][2] for u in uids_o],
-                [su[u][3] for u in uids_o],
-            )
+            (pack_state(uids_o, *([su[u][i] for u in uids_o] for i in range(4))),)
         )
         if closed:
             yield pd.DataFrame(
@@ -1002,22 +995,19 @@ def t7_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     out = (
-        stream.withColumn("shard", F.pmod("user_id", F.lit(64)))
+        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS))
         .groupBy("shard")
         .applyInPandasWithState(
             sessionize,
             outputStructType=(
                 "user_id long, start_us long, end_us long, n_events long, total_cents long"
             ),
-            stateStructType=(
-                "uids array<long>, start array<long>, last array<long>, "
-                "n array<long>, total_cents array<long>"
-            ),
+            stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    res = run_stream_to_table(out, "append")
+    res = run_stream_to_table(out, "append", state_partitions=STREAM_SHUFFLE_PARTITIONS)
     return res.select(
         "user_id",
         F.timestamp_micros("start_us").alias("sess_start"),
@@ -1859,13 +1849,11 @@ def s14_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = crawl.join(F.broadcast(corpus), "digest", "left")
 
     def classify(key, pdf_iter, state: GroupState):
-        # SHARD-keyed state (r14, the t7/s21 layout): one group per
-        # digest-hash shard — per-digest groups paid one python call +
-        # state ser/de per distinct digest per batch. r15 bounds the
-        # shard state (VERDICT item 2): (a) raw 32-byte digests packed
-        # into ONE binary blob instead of an array of 64-char hex
-        # strings (~3x fewer state bytes, no per-element object
-        # overhead); (b) corpus-dup digests are NOT stored — the
+        # One group per digest-hash shard, not per digest (the
+        # group-overhead argument in shard_state). Shard state: (a) raw
+        # 32-byte digests packed into ONE binary blob, not an array of
+        # 64-char hex strings (~3x fewer state bytes, no per-element
+        # object overhead); (b) corpus-dup digests are NOT stored — the
         # in_corpus probe short-circuits the seen-test, so their
         # membership is never consulted and the state tracks only the
         # stream-new share of digests. Rows sorted (dig, doc_id): each
@@ -2643,19 +2631,16 @@ def t17_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def attribute(key, pdf_iter, state: GroupState):
-        # SHARD-keyed state (r14, the t7/s21/s19 layout): one state
-        # group per hash shard with each shard user's latest-touch
-        # long in parallel arrays — per-user groups paid one python
-        # call + state ser/de per user per batch. Rows sorted
-        # (user_id, ts, event_id): every user sees the identical
-        # event order, so the emitted rows — and the batch-window
-        # oracle — are unchanged.
+        # one group per state partition (shard_state). Rows sorted
+        # (user_id, ts, event_id): every user sees the identical event
+        # order, so the emitted rows — and the oracle — are unchanged.
         (_shard,) = key
         touch_by: dict[int, int] = {}
         max_us = -(1 << 62)
         if state.exists:
-            uids_a, touch_a, max_us = state.get
-            touch_by = dict(zip(uids_a, touch_a))
+            uids_a, touch_a, max_a = unpack_state(state.get[0])
+            touch_by = dict(zip(uids_a.tolist(), touch_a.tolist()))
+            max_us = int(max_a[0])
         out: list[tuple] = []
         chunks = list(pdf_iter)
         for pdf in (
@@ -2687,26 +2672,26 @@ def t17_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # window).
         cutoff = max_us - T17_WINDOW_US
         uids_o = sorted(u for u, t in touch_by.items() if t >= cutoff)
-        state.update((uids_o, [touch_by[u] for u in uids_o], max_us))
+        state.update((pack_state(uids_o, [touch_by[u] for u in uids_o], [max_us]),))
         if out:
             yield pd.DataFrame(
                 out, columns=["event_id", "user_id", "purchase_us", "touch_us"]
             )
 
     raw = (
-        stream.withColumn("shard", F.pmod("user_id", F.lit(64)))
+        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS))
         .groupBy("shard")
         .applyInPandasWithState(
             attribute,
             outputStructType=(
                 "event_id long, user_id long, purchase_us long, touch_us long"
             ),
-            stateStructType="uids array<long>, touch array<long>, max_us long",
+            stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    res = run_stream_to_table(raw, "append")
+    res = run_stream_to_table(raw, "append", state_partitions=STREAM_SHUFFLE_PARTITIONS)
     gap = F.col("purchase_us") - F.col("touch_us")
     in_window = F.col("touch_us").isNotNull() & (gap <= 7 * 24 * 3600 * 1_000_000)
     return res.select(
@@ -3112,21 +3097,14 @@ def s19_stream_gapfill(
         # the per-event floor runs in the presum combiner (np.floor on
         # float64 is elementwise-identical to math.floor), and the
         # interp expression keeps the exact operand order of both
-        # engines' CAST-DOUBLE arithmetic.
-        # SHARD-keyed state (r14, the t22/s21 layout): one state group
-        # per hash shard holding every shard user's five scalars as
-        # parallel arrays. Keying by user_id paid one python call +
-        # state ser/de per user per batch (~15k groups at sf0.1); the
-        # shard kernel walks the same (user, hour) partials in the
-        # same per-user ascending-hour order, so the emitted grid —
-        # and the oracle — are unchanged.
+        # engines' CAST-DOUBLE arithmetic. One group per state
+        # partition (shard_state): each user's (user, hour) partials
+        # are walked in ascending-hour order as before.
         (_shard,) = key
         su: dict[int, list] = {}  # uid -> [ph, pu, oh, ou, on]
         if state.exists:
-            uids_a, ph_a, pu_a, oh_a, ou_a, on_a = state.get
-            for u_id, p0, p1, o0, o1, o2 in zip(
-                uids_a, ph_a, pu_a, oh_a, ou_a, on_a
-            ):
+            cols = (a.tolist() for a in unpack_state(state.get[0]))
+            for u_id, p0, p1, o0, o1, o2 in zip(*cols):
                 su[u_id] = [p0, p1, o0, o1, o2]
         # fold this micro-batch's (user, hour, n, units) partials from
         # different scan partitions (order-free integer sums), then
@@ -3176,14 +3154,7 @@ def s19_stream_gapfill(
                 st[2], st[3], st[4] = h, u_h, n_h
         uids_o = sorted(su)
         state.update(
-            (
-                uids_o,
-                [su[u][0] for u in uids_o],
-                [su[u][1] for u in uids_o],
-                [su[u][2] for u in uids_o],
-                [su[u][3] for u in uids_o],
-                [su[u][4] for u in uids_o],
-            )
+            (pack_state(uids_o, *([su[u][i] for u in uids_o] for i in range(5))),)
         )
         n_out = len(obs_rows) + n_gap
         if not n_out:
@@ -3225,7 +3196,7 @@ def s19_stream_gapfill(
         )
 
     res = (
-        partials.withColumn("shard", F.pmod("user_id", F.lit(64)))
+        partials.withColumn("shard", partition_shard("user_id", S19_STATE_PARTITIONS))
         .groupBy("shard")
         .applyInPandasWithState(
             gapfill,
@@ -3233,10 +3204,7 @@ def s19_stream_gapfill(
                 "user_id long, hour_num long, n_obs long, "
                 "locf_val double, interp_val double"
             ),
-            stateStructType=(
-                "uids array<long>, ph array<long>, pu array<long>, "
-                "oh array<long>, ou array<long>, onn array<long>"
-            ),
+            stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -3557,8 +3525,8 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def update_sketch(key, pdf_iter, state: GroupState):
         (week,) = key
         if state.exists:
-            n, levels = state.get
-            levels = [list(lvl) for lvl in levels]
+            n_a, *levels = unpack_state(state.get[0])
+            n, levels = int(n_a[0]), [lvl.view("<f8") for lvl in levels]
         else:
             n, levels = 0, []
         chunks = list(pdf_iter)
@@ -3569,8 +3537,7 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ([levels] if levels else []) + [batch_levels], QS_CAPACITY
             )
             n += len(vals)
-            levels = [lvl.tolist() for lvl in merged]
-            state.update((n, levels))
+            state.update((pack_state([n], *merged),))
             yield pd.DataFrame(
                 {
                     "week": [week],
@@ -3583,7 +3550,7 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.groupBy("week").applyInPandasWithState(
         update_sketch,
         outputStructType="week timestamp, n_vals long, p50 double, p90 double",
-        stateStructType="n long, levels array<array<double>>",
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -4151,14 +4118,15 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     def topk(key, pdf_iter, state: GroupState):
         (shard,) = key
         if state.exists:
-            open_wb, uids, cnts = state.get
+            wb_a, uids, cnts = unpack_state(state.get[0])
+            open_wb = int(wb_a[0])
             # normalize the persisted -1 sentinel back to None (the s21
             # rule; ADVICE r13) so a future refactor that persists
             # counters alongside the sentinel can't emit a phantom
             # window_num=-1 closure
             if open_wb < 0:
                 open_wb = None
-            counters = dict(zip(uids, cnts))
+            counters = dict(zip(uids.tolist(), cnts.tolist()))
         else:
             open_wb, counters = None, {}
         out_rows: list[tuple] = []
@@ -4214,9 +4182,11 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         items = sorted(counters.items())
         state.update(
             (
-                open_wb if open_wb is not None else -1,
-                [int(u) for u, _ in items],
-                [int(c) for _, c in items],
+                pack_state(
+                    [open_wb if open_wb is not None else -1],
+                    [u for u, _ in items],
+                    [c for _, c in items],
+                ),
             )
         )
         if out_rows:
@@ -4230,7 +4200,7 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputStructType=(
             "shard long, window_num long, user_id long, n_events long, rk long"
         ),
-        stateStructType="wb long, uids array<long>, cnts array<long>",
+        stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -4250,7 +4220,6 @@ def t22b_rocksdb_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- S21: streaming EWMA (stateful twin of batch ts7) --------------------------
 
 S21_LAGS = 24  # keep in lockstep with operators/timeseries.TS7_LAGS
-S21_SHARDS = 64  # state keys: pmod(user_id, S21_SHARDS) — the t22 layout
 
 
 def _s21_oracle() -> str:
@@ -4373,19 +4342,13 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def ewma(key, pdf_iter, state: GroupState):
-        # SHARD-keyed state (r14, the t22 layout): one state group per
-        # hash shard, holding every shard user's trailing sums as
-        # flattened parallel arrays. Keying by user_id cost one python
-        # call + one state ser/de PER USER PER BATCH (~15k groups at
-        # sf0.1; the r14 stage profile charged the four stateful
-        # stages ~266 µs/group, ~4 s of the 6.9 s wall); a shard sees
-        # the same per-(user, hour) partials and runs the identical
-        # per-user closure logic, so the emitted rows — and the oracle
-        # — are unchanged while group overhead drops to O(shards).
+        # one group per state partition (shard_state), holding every
+        # user's trailing sums as flattened parallel arrays
         (_shard,) = key
         per_user: dict[int, list] = {}
         if state.exists:
-            uids_a, hcnt_a, hrs_f, uns_f, oh_a, ou_a = state.get
+            cols = unpack_state(state.get[0])
+            uids_a, hcnt_a, hrs_f, uns_f, oh_a, ou_a = (a.tolist() for a in cols)
             pos = 0
             for u_id, hc, oh_v, ou_v in zip(uids_a, hcnt_a, oh_a, ou_a):
                 per_user[u_id] = [
@@ -4451,33 +4414,17 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             uns_o.extend(uns)
             oh_o.append(oh if oh is not None else -1)
             ou_o.append(ou)
-        state.update((uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o))
+        state.update((pack_state(uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o),))
         if out:
             yield pd.DataFrame(
                 out, columns=["user_id", "hour_num", "units_now", "ewma_scaled"]
             )
 
-    res = (
-        partials.withColumn("shard", F.pmod("user_id", F.lit(S21_SHARDS)))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            ewma,
-            outputStructType=(
-                "user_id long, hour_num long, units_now long, ewma_scaled long"
-            ),
-            stateStructType=(
-                "uids array<long>, hcnt array<long>, hrs array<long>, "
-                "uns array<long>, oh array<long>, ou array<long>"
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    # State-group count is input-sized (one per user: ~15k at sf0.1),
-    # so the 2-partition tiny-state profile serializes the per-group
-    # python work onto two tasks — size state partitions to the input
-    # like s19 (rows // per-partition target, clamped). Measured
-    # fresh-session mins (query_profile, r14): sf0.1 2p 11.1 s,
+    # State work is input-sized (per-user python over ~15k users at
+    # sf0.1), so the 2-partition tiny-state profile serializes it onto
+    # two tasks — size state partitions to the input like s19 (rows //
+    # per-partition target, clamped). Measured fresh-session mins
+    # (query_profile, r14, per-user state groups): sf0.1 2p 11.1 s,
     # 4p 8.6 s, 8p 11.7 s; 10x corpus 2p 36.7 s, 32p 14.9 s — the
     # 25k-events-per-partition divisor keeps both regimes on their
     # measured winner. Emission is partition-count-invariant, so the
@@ -4487,4 +4434,17 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
 
     s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
+    res = (
+        partials.withColumn("shard", partition_shard("user_id", s21_parts))
+        .groupBy("shard")
+        .applyInPandasWithState(
+            ewma,
+            outputStructType=(
+                "user_id long, hour_num long, units_now long, ewma_scaled long"
+            ),
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
     return run_stream_to_table(res, "append", state_partitions=s21_parts)

@@ -3,16 +3,12 @@ that ``get_spark`` installs for streaming checkpoints on local masters."""
 
 from __future__ import annotations
 
-import hashlib
 import logging
 import os
 import shutil
 from types import SimpleNamespace
 
-import pandas as pd
-
 from sparkstreaming_mq_spark import session
-from sparkstreaming_mq_spark.oracle import canon_frame
 
 STOCK_LOCAL_FS = "org.apache.hadoop.fs.local.LocalFs"
 
@@ -130,49 +126,3 @@ def test_missing_javac_keeps_stock_local_fs_with_one_warning(monkeypatch, tmp_pa
     assert [r.levelno for r in caplog.records] == [logging.WARNING]
     assert not (tmp_path / ".build").exists()
 
-
-def _digest(pdf: pd.DataFrame) -> str:
-    return hashlib.sha256(repr(canon_frame(pdf)).encode()).hexdigest()
-
-
-def test_s21_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path):
-    """s21 over the first two replay chunks, then over all four from the
-    same checkpoint (the s9_checkpoint_recovery pattern): the state
-    deltas the first run wrote must read back so that the two outputs
-    together equal one uninterrupted run. The memory sink cannot
-    restart from a checkpoint, so the two runs deliver through
-    foreachBatch."""
-    from sparkstreaming_mq_spark.streaming import queries, sources
-
-    whole = queries.s21_stream_ewma(spark, sf_dir).toPandas()
-
-    chunks = sources.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
-    names = sorted(n for n in os.listdir(chunks) if n.startswith("chunk_"))
-    assert len(names) == 4
-    live, ckpt = tmp_path / "live", str(tmp_path / "ckpt")
-    outputs: list[list[pd.DataFrame]] = []
-
-    def run_to_batches(df, mode, state_partitions=None):
-        batches = []
-        with sources._stream_partitions(spark, state_partitions):
-            (
-                df.writeStream.foreachBatch(lambda b, _epoch: batches.append(b.toPandas()))
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        outputs.append(batches)
-
-    monkeypatch.setattr(sources, "chunked_events_dir", lambda *a, **k: str(live))
-    monkeypatch.setattr(queries, "run_stream_to_table", run_to_batches)
-    for run in (names[:2], names[2:]):
-        for n in run:
-            shutil.copytree(os.path.join(chunks, n), live / n)  # keeps the mtimes
-        queries.s21_stream_ewma(spark, sf_dir)
-
-    assert [len(batches) for batches in outputs] == [2, 2]
-    assert all(sum(map(len, batches)) for batches in outputs)
-    resumed = pd.concat([b for batches in outputs for b in batches], ignore_index=True)
-    assert _digest(resumed) == _digest(whole)

@@ -1,0 +1,171 @@
+"""Packed binary state and partition-aligned shard keys of the
+``applyInPandasWithState`` operators (``streaming/shard_state.py``)."""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import subprocess
+import sys
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from sparkstreaming_mq_spark.oracle import canon_frame
+from sparkstreaming_mq_spark.streaming.shard_state import (
+    hash_long,
+    pack_state,
+    partition_shard,
+    shard_labels,
+    unpack_state,
+)
+
+I64_MIN, I64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def test_pack_round_trips_int64_arrays():
+    arrays = [[], [I64_MIN, -1, 0, 1, I64_MAX], [7], []]
+    blob = pack_state(*arrays)
+    assert len(blob) == 8 * (1 + len(arrays) + 6)
+    got = unpack_state(blob)
+    assert [a.dtype for a in got] == [np.dtype("<i8")] * len(arrays)
+    assert [a.tolist() for a in got] == arrays
+    assert [a.tolist() for a in unpack_state(bytearray(blob))] == arrays
+    assert unpack_state(pack_state()) == []
+
+
+def test_pack_keeps_float64_bit_patterns():
+    vals = np.array([-0.0, 0.0, 1.5, -2.25e-308, 5e-324, np.inf, -np.inf, np.nan])
+    ints = np.array([3, -4], dtype="int64")
+    n, f, i = unpack_state(pack_state([len(vals)], vals, ints))
+    assert n.tolist() == [len(vals)] and i.tolist() == [3, -4]
+    assert f.tobytes() == vals.astype("<f8").tobytes()
+    back = f.view("<f8")
+    assert np.signbit(back[0]) and not np.signbit(back[1])
+    assert np.isnan(back[-1])
+
+
+def test_state_functions_unpickle_without_the_package(tmp_path):
+    """UDF closures carry pack/unpack by value: a Python worker that cannot
+    import this package (a session not built by get_spark, driven from
+    another cwd) must still run them."""
+    from pyspark import cloudpickle
+
+    code = (
+        "import pickle, sys; pack, unpack = pickle.loads(sys.stdin.buffer.read()); "
+        "print(unpack(pack([5, 6], [-1.5]))[0].tolist())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-I", "-c", code],
+        input=cloudpickle.dumps((pack_state, unpack_state)),
+        cwd=tmp_path,
+        capture_output=True,
+        check=True,
+        timeout=60,
+    )
+    assert out.stdout.strip() == b"[5, 6]"
+
+
+def test_hash_long_equals_spark_hash(spark):
+    vals = [0, 1, -1, 42, -42, (1 << 31) - 1, -(1 << 31), 1 << 31, -(1 << 31) - 1,
+            1 << 32, 123_456_789_012_345, -987_654_321_098, I64_MAX, I64_MIN,
+            I64_MAX - 1, I64_MIN + 1]
+    vals += list(range(-300, 300, 7))
+    rows = (
+        spark.createDataFrame([(v,) for v in vals], "v long")
+        .select("v", F.hash("v").alias("h"))
+        .collect()
+    )
+    assert len(rows) == len(vals)
+    assert {r.v: hash_long(r.v) for r in rows} == {r.v: r.h for r in rows}
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 8, 32])
+def test_partition_shard_puts_one_label_in_each_partition(spark, n):
+    df = spark.range(-1000, 3000).withColumnRenamed("id", "user_id")
+    pairs = (
+        df.withColumn("shard", partition_shard("user_id", n))
+        .repartition(n, "shard")
+        .select(F.spark_partition_id().alias("p"), "shard")
+        .distinct()
+        .collect()
+    )
+    by_part: dict[int, set] = {}
+    for r in pairs:
+        by_part.setdefault(r.p, set()).add(r.shard)
+    labels = shard_labels(n)
+    assert by_part == {p: {labels[p]} for p in range(n)}
+
+
+def _compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.mark.parametrize("name", ["s21_stream_ewma", "t22_stream_heavy_hitters"])
+def test_rerun_compiles_no_new_code(spark, sf_dir, name):
+    """A stateful query re-planned with the same shape must hit Spark's
+    codegen cache. Array-typed state columns made the state encoder's
+    ``MapObjects`` lambda name differ per plan, so every micro-batch of
+    every run compiled again."""
+    from sparkstreaming_mq_spark.streaming import queries
+
+    fn = getattr(queries, name)
+    fn(spark, sf_dir)
+    before = _compiles(spark)
+    fn(spark, sf_dir)
+    assert _compiles(spark) - before == 0
+
+
+def _digest(pdf: pd.DataFrame) -> str:
+    return hashlib.sha256(repr(canon_frame(pdf)).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("name", ["s21_stream_ewma", "t7_stateful_sessionize"])
+def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name):
+    """The query over the first two replay chunks, then over all four
+    from the same checkpoint (the s9_checkpoint_recovery pattern): the
+    packed state the first run wrote must read back — under the shard
+    labels of the partition count frozen into the checkpoint — so that
+    the two outputs together equal one uninterrupted run. The memory
+    sink cannot restart from a checkpoint, so the two runs deliver
+    through foreachBatch."""
+    from sparkstreaming_mq_spark.streaming import queries, sources
+
+    fn = getattr(queries, name)
+    whole = fn(spark, sf_dir).toPandas()
+
+    chunks = sources.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    names = sorted(n for n in os.listdir(chunks) if n.startswith("chunk_"))
+    assert len(names) == 4
+    live, ckpt = tmp_path / "live", str(tmp_path / "ckpt")
+    n_batches: list[int] = []
+
+    def run_to_batches(df, mode, state_partitions=None):
+        batches = []
+        with sources._stream_partitions(spark, state_partitions):
+            (
+                df.writeStream.foreachBatch(lambda b, _epoch: batches.append(b.toPandas()))
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        n_batches.append(len(batches))
+        return spark.createDataFrame(pd.concat(batches, ignore_index=True), df.schema)
+
+    monkeypatch.setattr(sources, "chunked_events_dir", lambda *a, **k: str(live))
+    monkeypatch.setattr(queries, "run_stream_to_table", run_to_batches)
+    outputs = []
+    for run in (names[:2], names[2:]):
+        for n in run:
+            shutil.copytree(os.path.join(chunks, n), live / n)  # keeps the mtimes
+        outputs.append(fn(spark, sf_dir).toPandas())
+
+    assert n_batches == [2, 2]
+    assert all(len(out) for out in outputs)
+    assert _digest(pd.concat(outputs, ignore_index=True)) == _digest(whole)
