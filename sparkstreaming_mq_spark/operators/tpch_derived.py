@@ -35,7 +35,7 @@ SURVEY.md §2's warehouse-query surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkstreaming_mq_spark.registry import query
@@ -78,6 +78,16 @@ part_x AS (
 """
 
 
+def ps_availqty(partkey: str, suppkey: str) -> Column:
+    """partsupp's available quantity, a pure function of the pair key."""
+    return ((F.col(partkey) * 37 + F.col(suppkey) * 101) % 9999 + 1).cast("long")
+
+
+def ps_supplycost_cents(partkey: str, suppkey: str) -> Column:
+    """partsupp's supply cost in BIGINT cents, a pure function of the pair key."""
+    return ((F.col(partkey) * 131 + F.col(suppkey) * 977) % 99901 + 100).cast("long")
+
+
 def load_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The partsupp surrogate: one row per observed (part, supplier)
     pair with hash-derived availqty / supplycost (exact BIGINT cents).
@@ -98,12 +108,8 @@ def load_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "ps_partkey",
         "ps_suppkey",
-        ((F.col("ps_partkey") * 37 + F.col("ps_suppkey") * 101) % 9999 + 1)
-        .cast("long")
-        .alias("ps_availqty"),
-        ((F.col("ps_partkey") * 131 + F.col("ps_suppkey") * 977) % 99901 + 100)
-        .cast("long")
-        .alias("ps_supplycost_cents"),
+        ps_availqty("ps_partkey", "ps_suppkey").alias("ps_availqty"),
+        ps_supplycost_cents("ps_partkey", "ps_suppkey").alias("ps_supplycost_cents"),
     )
 
 
@@ -332,11 +338,8 @@ def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     bp = F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long")
-    # load_partsupp's ps_supplycost_cents expression applied to this
-    # row's pair key — identical BIGINT arithmetic, identical value.
-    supplycost_cents = (
-        (F.col("l_partkey") * 131 + F.col("l_suppkey") * 977) % 99901 + 100
-    ).cast("long")
+    # load_partsupp's supply cost applied to this row's pair key
+    supplycost_cents = ps_supplycost_cents("l_partkey", "l_suppkey")
     profit_units = cents * (F.lit(10000) - bp) - (
         supplycost_cents * F.col("l_quantity").cast("long") * F.lit(10000)
     )
@@ -624,10 +627,8 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = F.lit("1996-01-01 00:00:00").cast("timestamp")
     hi = F.lit("1997-01-01 00:00:00").cast("timestamp")
-    # load_partsupp's ps_availqty expression on the group's pair key.
-    availqty = (
-        (F.col("l_partkey") * 37 + F.col("l_suppkey") * 101) % 9999 + 1
-    ).cast("long")
+    # load_partsupp's available quantity on the group's pair key
+    availqty = ps_availqty("l_partkey", "l_suppkey")
     excess = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_quantity", "l_shipdate")

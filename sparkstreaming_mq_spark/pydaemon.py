@@ -8,13 +8,26 @@ an importer re-reads only when its archive's ``(st_mtime_ns, st_size,
 st_ino)`` changed since it last read it, so a rewritten zip is still
 picked up. Selected by ``spark.python.daemon.module`` (``session.ENGINE_CONF``);
 the forked workers inherit the patch.
+
+After each task on a reused worker, ``pyspark.daemon`` runs a full
+``gc.collect()``. Without help that walks every object the worker imported
+(~75k, nearly all pandas/pyarrow), 30-45 ms per task. The daemon therefore
+imports the modules every Arrow task needs (``PRELOAD``) and freezes its heap
+before it forks: workers inherit the frozen generation, and each collect
+walks only the objects created after the fork.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import sys
 import zipimport
+
+# Imported by every Arrow task anyway. A module a worker imports after the
+# fork is re-walked by every task's collect; engine modules stay out.
+PRELOAD = ("pandas", "pyarrow", "pyspark.sql.pandas.serializers")
 
 _eager_invalidate_caches = zipimport.zipimporter.invalidate_caches
 
@@ -41,4 +54,7 @@ if __name__ == "__main__":
     install()
     from pyspark.daemon import manager
 
+    for name in PRELOAD:
+        importlib.import_module(name)
+    gc.freeze()
     manager()

@@ -325,15 +325,6 @@ TAIL_PRIORITY: tuple[str, ...] = (
     "l51_cluster_survivorship", # quality-keeper near-dup policy (r13)
 )
 
-# Slot swaps made THIS round (new_name -> old_name): the newest
-# CORRECTNESS artifact on disk still shows old_name until the driver
-# re-runs the gate; tests/test_registry_priority.py uses this to keep
-# the artifact audit exact. Clear once the reflecting artifact lands.
-PENDING_SLOT_SWAPS: dict[str, str] = {
-    "t22_stream_heavy_hitters": "l2b_ngram_jaccard",
-}
-
-
 def _ordered(names: dict) -> dict:
     """PRIORITY first (driver scores the first 50), then TAIL_PRIORITY,
     then everything else in registration order."""

@@ -184,11 +184,4 @@ def test_latest_driver_artifact_matches_priority():
         return
     with open(arts[-1]) as f:
         latest = json.load(f)
-    # A slot swap made THIS round is not yet reflected in the newest
-    # on-disk artifact; registry.PENDING_SLOT_SWAPS maps each swapped-in
-    # name back to the name the artifact still shows. Exact otherwise.
-    expected_prior = tuple(
-        registry.PENDING_SLOT_SWAPS.get(n, n) for n in registry.PRIORITY
-    )
-    got = tuple(latest.keys())
-    assert got in (registry.PRIORITY, expected_prior)
+    assert tuple(latest.keys()) == registry.PRIORITY

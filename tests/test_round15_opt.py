@@ -10,7 +10,9 @@ stay bit-equal to the forms they replaced.
   distinct pair set OF lineitem with pure key-function values, so the
   inner/left pair joins back to lineitem collapse into inline
   expressions / a conditional aggregate. Plan pins assert the
-  pair-distinct Exchange and the extra lineitem scan stay gone.
+  pair-distinct Exchange and the extra lineitem scan stay gone, and
+  the invariant test checks partsupp against the inline values and
+  the oracles' SQL derivation.
 """
 
 from __future__ import annotations
@@ -18,8 +20,17 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from pyspark.sql import functions as F
+
 from sparkstreaming_mq_spark import registry
 from sparkstreaming_mq_spark.operators.llm import _jaccard_matrix_kernel
+from sparkstreaming_mq_spark.operators.tpch_derived import (
+    DERIVED_CTE,
+    load_partsupp,
+    ps_availqty,
+    ps_supplycost_cents,
+)
+from sparkstreaming_mq_spark.tables import load_table
 
 registry.load_all()
 Q = registry.QUERIES
@@ -50,6 +61,38 @@ def test_q20_partsupp_build_fused_into_aggregate(spark, sf_dir):
     assert "hashpartitioning(ps_partkey" not in plan
     assert plan.count("Scan parquet") == 8  # 4 scans x (tree + detail)
     assert "hashpartitioning(l_partkey" in plan
+
+
+def test_partsupp_is_a_pure_function_of_lineitem_pairs(spark, duck, sf_dir):
+    """The elisions above hold only if every lineitem row joins exactly
+    one partsupp row whose columns equal the per-row values q09/q20
+    compute inline, and the oracles' SQL partsupp is that same table."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_partkey",
+        "l_suppkey",
+        ps_availqty("l_partkey", "l_suppkey").alias("q20_availqty"),
+        ps_supplycost_cents("l_partkey", "l_suppkey").alias("q09_supplycost_cents"),
+    )
+    ps = load_partsupp(spark, sf_dir)
+    joined = li.join(
+        ps,
+        (F.col("l_partkey") == F.col("ps_partkey"))
+        & (F.col("l_suppkey") == F.col("ps_suppkey")),
+    )
+    n_rows = li.count()
+    assert n_rows > 0
+    assert joined.count() == n_rows
+    differ = (F.col("q20_availqty") != F.col("ps_availqty")) | (
+        F.col("q09_supplycost_cents") != F.col("ps_supplycost_cents")
+    )
+    assert joined.filter(differ).count() == 0
+
+    cols = ["ps_partkey", "ps_suppkey", "ps_availqty", "ps_supplycost_cents"]
+    got = ps.toPandas().sort_values(cols[:2]).reset_index(drop=True)
+    want = duck.execute(
+        f"WITH {DERIVED_CTE} SELECT {', '.join(cols)} FROM partsupp ORDER BY 1, 2"
+    ).fetchdf()
+    assert np.array_equal(got[cols].to_numpy("int64"), want[cols].to_numpy("int64"))
 
 
 def _reference_asym(probe_ids, probe_mat, corp_ids, corp_mat, threshold):
