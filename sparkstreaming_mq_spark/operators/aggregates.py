@@ -1614,6 +1614,8 @@ def _a18_partials(batch_iter):
     import numpy as np
     import pandas as pd
 
+    from sparkstreaming_mq_spark.streaming.shard_state import sum_by_keys
+
     buf_a: list = []
     buf_b: list = []
     buf_c: list = []
@@ -1624,18 +1626,11 @@ def _a18_partials(batch_iter):
         nonlocal buf_len
         if not buf_a:
             return
-        a = np.concatenate(buf_a)
-        b = np.concatenate(buf_b)
-        c = np.concatenate(buf_c)
-        o = np.lexsort((b, a))
-        a, b, c = a[o], b[o], c[o]
-        nb = np.ones(len(a), dtype=bool)
-        nb[1:] = (a[1:] != a[:-1]) | (b[1:] != b[:-1])
-        i = np.flatnonzero(nb)
-        buf_a[:] = [a[i]]
-        buf_b[:] = [b[i]]
-        buf_c[:] = [np.add.reduceat(c, i).astype(np.int64)]
-        buf_len = len(i)
+        (a, b), (c,), _ = sum_by_keys(
+            (np.concatenate(buf_a), np.concatenate(buf_b)), [np.concatenate(buf_c)]
+        )
+        buf_a[:], buf_b[:], buf_c[:] = [a], [b], [c]
+        buf_len = len(a)
 
     def _process(ok: "np.ndarray", pk: "np.ndarray") -> None:
         """Fold one segment of COMPLETE baskets into the partials."""

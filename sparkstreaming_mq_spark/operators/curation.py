@@ -1982,40 +1982,10 @@ def _l49_pair_partials(batch_iter):
     import numpy as np
     import pandas as pd
 
+    from sparkstreaming_mq_spark.streaming.shard_state import Combiner
+
     PAIR_SLICE = 4_000_000
-    part_srcs: list = []
-    part_dsts: list = []
-    part_cnts: list = []
-    buf_len = [0]
-
-    def _fold() -> tuple:
-        """Compress the accumulated slice partials to unique triples."""
-        src = np.concatenate(part_srcs)
-        dst = np.concatenate(part_dsts)
-        cnt = np.concatenate(part_cnts)
-        o = np.lexsort((dst, src))
-        src, dst, cnt = src[o], dst[o], cnt[o]
-        nb = np.ones(len(src), dtype=bool)
-        nb[1:] = (src[1:] != src[:-1]) | (dst[1:] != dst[:-1])
-        b = np.flatnonzero(nb)
-        return src[b], dst[b], np.add.reduceat(cnt, b).astype(np.int64)
-
-    def _flush(src: "np.ndarray", dst: "np.ndarray") -> None:
-        o = np.lexsort((dst, src))
-        src, dst = src[o], dst[o]
-        nb = np.ones(len(src), dtype=bool)
-        nb[1:] = (src[1:] != src[:-1]) | (dst[1:] != dst[:-1])
-        b = np.flatnonzero(nb)
-        part_srcs.append(src[b])
-        part_dsts.append(dst[b])
-        part_cnts.append(np.diff(np.append(b, len(src))).astype(np.int64))
-        buf_len[0] += len(b)
-        if buf_len[0] > 2 * PAIR_SLICE:
-            s, d, c = _fold()
-            part_srcs[:] = [s]
-            part_dsts[:] = [d]
-            part_cnts[:] = [c]
-            buf_len[0] = len(s)
+    pairs = Combiner(bound=2 * PAIR_SLICE)
 
     def _process(f1: "np.ndarray", f2: "np.ndarray", dc: "np.ndarray") -> None:
         """Fold one segment of COMPLETE (fp1, fp2) groups into partials."""
@@ -2036,7 +2006,7 @@ def _l49_pair_partials(batch_iter):
             for lo in range(0, len(sel), step):
                 s = sel[lo : lo + step]
                 mat = dc[(s[:, None] + np.arange(k)[None, :]).ravel()].reshape(-1, k)
-                _flush(mat[:, iu].ravel(), mat[:, ju].ravel())
+                pairs.add((mat[:, iu].ravel(), mat[:, ju].ravel()))
 
     tail = None
     for batch in batch_iter:
@@ -2067,10 +2037,10 @@ def _l49_pair_partials(batch_iter):
             _process(f1[:cut], f2[:cut], dc[:cut])
     if tail is not None and len(tail[0]):
         _process(*tail)
-    if not part_srcs:
-        return
-    src, dst, cnt = _fold()
-    yield pd.DataFrame({"src_doc": src, "dst_doc": dst, "cnt": cnt})
+    folded = pairs.result()
+    if folded is not None:
+        (src, dst), _, cnt = folded
+        yield pd.DataFrame({"src_doc": src, "dst_doc": dst, "cnt": cnt})
 
 
 @query("l49_containment_pairs", oracle=L49_ORACLE)

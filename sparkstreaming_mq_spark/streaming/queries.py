@@ -33,10 +33,10 @@ from sparkstreaming_mq_spark.streaming.sources import (
     run_stream_to_table,
 )
 from sparkstreaming_mq_spark.streaming.shard_state import (
-    STATE_SCHEMA,
-    pack_state,
+    Combiner,
     partition_shard,
-    unpack_state,
+    sharded_state,
+    sum_by_keys,
 )
 from sparkstreaming_mq_spark.tables import load_table
 
@@ -939,73 +939,45 @@ def t7_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the UDF would be association-order-sensitive and break hash
     parity (the repo's never-round-in-pandas rule); integer adds are
     exact and order-free on both engines."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "user_id", "ts", "value"
     )
 
-    def sessionize(key, pdf_iter, state: GroupState):
-        # one group per state partition (shard_state): the per-user
-        # state machine below sees each user's rows in the same ts order
+    def sessionize(_key, state, pdf):
         import math
 
-        (_shard,) = key
         su: dict[int, list] = {}  # uid -> [start, last, n, cents]
-        if state.exists:
-            cols = (a.tolist() for a in unpack_state(state.get[0]))
-            for u_id, s0, l0, n0, c0 in zip(*cols):
+        if state is not None:
+            for u_id, s0, l0, n0, c0 in zip(*(a.tolist() for a in state)):
                 su[u_id] = [s0, l0, n0, c0]
         closed: list[tuple] = []
-        # Concatenate BEFORE sorting: the iterator yields the group's
-        # micro-batch rows as multiple Arrow chunks once they exceed
-        # arrow.maxRecordsPerBatch, and a per-chunk sort would let `last`
-        # move backward across chunk boundaries at scale (review r4).
-        # Sorting (user_id, ts) keeps each user's rows in the ts order
-        # the per-user form saw; cross-user order is irrelevant.
-        chunks = list(pdf_iter)
-        for pdf in (
-            [pd.concat(chunks).sort_values(["user_id", "ts"])] if chunks else []
-        ):
-            for uid, ts, val in zip(pdf["user_id"], pdf["ts"], pdf["value"]):
-                uid = int(uid)
-                st = su.get(uid)
-                if st is None:
-                    st = su[uid] = [None, None, 0, 0]
-                start, last, n, cents = st
-                us = int(ts.value // 1000)  # pandas ns → µs
-                if last is not None and us - last > SESSION_GAP_US:
-                    closed.append((uid, start, last, n, cents))
-                    start, n, cents = us, 0, 0
-                if start is None:
-                    start = us
-                # fixed-point cents: same IEEE double ops as the SQL
-                # floor(v*100+0.5), then exact integer accumulation
-                st[0], st[1], st[2] = start, us, n + 1
-                st[3] = cents + int(math.floor(float(val) * 100 + 0.5))
+        for uid, ts, val in zip(pdf["user_id"], pdf["ts"], pdf["value"]):
+            uid = int(uid)
+            st = su.get(uid)
+            if st is None:
+                st = su[uid] = [None, None, 0, 0]
+            start, last, n, cents = st
+            us = int(ts.value // 1000)  # pandas ns → µs
+            if last is not None and us - last > SESSION_GAP_US:
+                closed.append((uid, start, last, n, cents))
+                start, n, cents = us, 0, 0
+            if start is None:
+                start = us
+            # fixed-point cents: same IEEE double ops as the SQL
+            # floor(v*100+0.5), then exact integer accumulation
+            st[0], st[1], st[2] = start, us, n + 1
+            st[3] = cents + int(math.floor(float(val) * 100 + 0.5))
         uids_o = sorted(su)
-        state.update(
-            (pack_state(uids_o, *([su[u][i] for u in uids_o] for i in range(4))),)
-        )
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "start_us", "end_us", "n_events", "total_cents"],
-            )
+        return [uids_o, *([su[u][i] for u in uids_o] for i in range(4))], closed
 
-    out = (
-        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=(
-                "user_id long, start_us long, end_us long, n_events long, total_cents long"
-            ),
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # sorting (user_id, ts) keeps each user's rows in the ts order the
+    # per-user form saw; cross-user order is irrelevant
+    out = sharded_state(
+        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS)),
+        "shard",
+        "user_id long, start_us long, end_us long, n_events long, total_cents long",
+        sessionize,
+        sort=["user_id", "ts"],
     )
     res = run_stream_to_table(out, "append", state_partitions=STREAM_SHUFFLE_PARTITIONS)
     return res.select(
@@ -1833,8 +1805,8 @@ def s14_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standing store — stateless broadcast probe), 'new' (first
     sighting on the stream), or 'dup_in_batch' (the stream saw it in
     this or an earlier micro-batch — per-digest state store bit)."""
+    import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     corpus = (
         load_table(spark, sf_dir, "documents")
@@ -1848,62 +1820,47 @@ def s14_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probed = crawl.join(F.broadcast(corpus), "digest", "left")
 
-    def classify(key, pdf_iter, state: GroupState):
-        # One group per digest-hash shard, not per digest (the
-        # group-overhead argument in shard_state). Shard state: (a) raw
-        # 32-byte digests packed into ONE binary blob, not an array of
-        # 64-char hex strings (~3x fewer state bytes, no per-element
-        # object overhead); (b) corpus-dup digests are NOT stored — the
-        # in_corpus probe short-circuits the seen-test, so their
-        # membership is never consulted and the state tracks only the
-        # stream-new share of digests. Rows sorted (dig, doc_id): each
-        # digest sees the identical doc order (hex and raw bytes sort
-        # identically byte-wise), so the emitted labels — and the
+    def classify(_key, state, pdf):
+        # Shard state: (a) raw 32-byte digests packed as int64 quads,
+        # not 64-char hex strings (~3x fewer state bytes, no
+        # per-element object overhead); (b) corpus-dup digests are NOT
+        # stored — the in_corpus probe short-circuits the seen-test, so
+        # their membership is never consulted and the state tracks only
+        # the stream-new share of digests. Rows sorted (dig, doc_id):
+        # each digest sees the identical doc order (hex and raw bytes
+        # sort identically byte-wise), so the emitted labels — and the
         # replay oracle — are unchanged.
-        (_shard,) = key
         seen: set = set()
-        if state.exists:
-            blob = state.get[0] or b""
-            seen = {bytes(blob[i : i + 32]) for i in range(0, len(blob), 32)}
+        if state is not None:
+            blob = state[0].tobytes()
+            seen = {blob[i : i + 32] for i in range(0, len(blob), 32)}
         rows: list[tuple] = []
-        # concat-then-sort: see t7's sessionize — per-chunk sorts break
-        # global doc_id order once a group's batch spans Arrow chunks
-        chunks = list(pdf_iter)
-        for pdf in (
-            [pd.concat(chunks).sort_values(["dig", "doc_id"])] if chunks else []
-        ):
-            for doc_id, dig, in_corpus in zip(
-                pdf["doc_id"], pdf["dig"], pdf["in_corpus"]
-            ):
-                d = bytes(dig)
-                if not pd.isna(in_corpus):
-                    status = "dup_of_corpus"
-                elif d in seen:
-                    status = "dup_in_batch"
-                else:
-                    status = "new"
-                    seen.add(d)
-                rows.append((int(doc_id), d.hex(), status))
-        state.update((b"".join(sorted(seen)),))
-        if rows:
-            yield pd.DataFrame(rows, columns=["doc_id", "digest", "status"])
+        for doc_id, dig, in_corpus in zip(pdf["doc_id"], pdf["dig"], pdf["in_corpus"]):
+            d = bytes(dig)
+            if not pd.isna(in_corpus):
+                status = "dup_of_corpus"
+            elif d in seen:
+                status = "dup_in_batch"
+            else:
+                status = "new"
+                seen.add(d)
+            rows.append((int(doc_id), d.hex(), status))
+        return [np.frombuffer(b"".join(sorted(seen)), dtype="<i8")], rows
 
-    out = (
+    shard = partition_shard(F.xxhash64("digest"), STREAM_SHUFFLE_PARTITIONS)
+    out = sharded_state(
         # the python workers receive the 32-byte unhexed digest, not
         # the 64-char hex string (the hex round-trips exactly through
         # bytes.hex() — F.sha2 emits lowercase)
-        probed.withColumn("shard", F.pmod(F.xxhash64("digest"), F.lit(64)))
-        .select("shard", "doc_id", F.unhex("digest").alias("dig"), "in_corpus")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            classify,
-            outputStructType="doc_id long, digest string, status string",
-            stateStructType="seen binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        probed.withColumn("shard", shard).select(
+            "shard", "doc_id", F.unhex("digest").alias("dig"), "in_corpus"
+        ),
+        "shard",
+        "doc_id long, digest string, status string",
+        classify,
+        sort=["dig", "doc_id"],
     )
-    return run_stream_to_table(out, "append")
+    return run_stream_to_table(out, "append", state_partitions=STREAM_SHUFFLE_PARTITIONS)
 
 
 # --- T14: chained stateful operators (multi-agg in one streaming query) ------
@@ -2623,43 +2580,30 @@ def t17_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is 8 bytes/user vs t7's session struct; emission is
     append-mode per arriving purchase, so latency is per-batch, not
     end-of-stream. The touch-window filter stays JVM-side."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "user_id", "ts", "event_id", "event_type"
     )
 
-    def attribute(key, pdf_iter, state: GroupState):
-        # one group per state partition (shard_state). Rows sorted
-        # (user_id, ts, event_id): every user sees the identical event
-        # order, so the emitted rows — and the oracle — are unchanged.
-        (_shard,) = key
+    def attribute(_key, state, pdf):
         touch_by: dict[int, int] = {}
         max_us = -(1 << 62)
-        if state.exists:
-            uids_a, touch_a, max_a = unpack_state(state.get[0])
+        if state is not None:
+            uids_a, touch_a, max_a = state
             touch_by = dict(zip(uids_a.tolist(), touch_a.tolist()))
             max_us = int(max_a[0])
         out: list[tuple] = []
-        chunks = list(pdf_iter)
-        for pdf in (
-            [pd.concat(chunks).sort_values(["user_id", "ts", "event_id"])]
-            if chunks
-            else []
+        for uid, ts, eid, etype in zip(
+            pdf["user_id"], pdf["ts"], pdf["event_id"], pdf["event_type"]
         ):
-            for uid, ts, eid, etype in zip(
-                pdf["user_id"], pdf["ts"], pdf["event_id"], pdf["event_type"]
-            ):
-                uid = int(uid)
-                us = int(ts.value // 1000)  # pandas ns -> µs
-                if etype == "purchase":
-                    touch = touch_by.get(uid, -1)
-                    out.append((int(eid), uid, us, touch if touch >= 0 else None))
-                elif etype in ("click", "view"):
-                    touch_by[uid] = us
-                if us > max_us:
-                    max_us = us
+            uid = int(uid)
+            us = int(ts.value // 1000)  # pandas ns -> µs
+            if etype == "purchase":
+                touch = touch_by.get(uid, -1)
+                out.append((int(eid), uid, us, touch if touch >= 0 else None))
+            elif etype in ("click", "view"):
+                touch_by[uid] = us
+            if us > max_us:
+                max_us = us
         # EVICTION (r15, VERDICT item 3): a touch strictly older than
         # the attribution window behind the shard's max seen event time
         # can never attribute again — the time-ordered replay
@@ -2672,24 +2616,16 @@ def t17_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # window).
         cutoff = max_us - T17_WINDOW_US
         uids_o = sorted(u for u, t in touch_by.items() if t >= cutoff)
-        state.update((pack_state(uids_o, [touch_by[u] for u in uids_o], [max_us]),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["event_id", "user_id", "purchase_us", "touch_us"]
-            )
+        return [uids_o, [touch_by[u] for u in uids_o], [max_us]], out
 
-    raw = (
-        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            attribute,
-            outputStructType=(
-                "event_id long, user_id long, purchase_us long, touch_us long"
-            ),
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # Rows sorted (user_id, ts, event_id): every user sees the identical
+    # event order, so the emitted rows — and the oracle — are unchanged.
+    raw = sharded_state(
+        stream.withColumn("shard", partition_shard("user_id", STREAM_SHUFFLE_PARTITIONS)),
+        "shard",
+        "event_id long, user_id long, purchase_us long, touch_us long",
+        attribute,
+        sort=["user_id", "ts", "event_id"],
     )
     res = run_stream_to_table(raw, "append", state_partitions=STREAM_SHUFFLE_PARTITIONS)
     gap = F.col("purchase_us") - F.col("touch_us")
@@ -2989,7 +2925,6 @@ def s19_stream_gapfill(
     CAST-DOUBLE expressions; sums are exact integer micro-units
     (never-round-in-pandas rule), so the full value hash matches."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stream = read_events_stream_chunked(
         spark, sf_dir, n_chunks=n_chunks, order="time"
@@ -3020,74 +2955,30 @@ def s19_stream_gapfill(
 
     def presum(batch_iter):
         # stateless per-PARTITION (user, hour) partials — count AND
-        # exact micro-unit sum, both additive integers — accumulated
-        # across the Arrow batch iterator and emitted ONCE per
-        # partition (_a18_partials-style), so the state exchange moves
-        # O(scan partitions × users × hours) rows, never O(events) and
-        # never × Arrow-batch count. Compress bound as in t22/s21.
-        acc_uid: list = []
-        acc_hs: list = []
-        acc_n: list = []
-        acc_u: list = []
-        acc_len = 0
-
-        def _fold():
-            uid = np.concatenate(acc_uid)
-            hs = np.concatenate(acc_hs)
-            n = np.concatenate(acc_n)
-            u = np.concatenate(acc_u)
-            order = np.lexsort((hs, uid))
-            uid, hs, n, u = uid[order], hs[order], n[order], u[order]
-            nb = np.ones(len(uid), dtype=bool)
-            nb[1:] = (uid[1:] != uid[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            return (
-                uid[i],
-                hs[i],
-                np.add.reduceat(n, i).astype("int64"),
-                np.add.reduceat(u, i).astype("int64"),
-            )
-
+        # exact micro-unit sum, both additive integers
+        comb = Combiner()
         for pdf in batch_iter:
-            if not len(pdf):
-                continue
             # tz-aware pandas ts -> UTC ns int64 (same epoch µs t7
             # reads per-element via .value)
             hs = np.asarray(
                 pdf["ts"].values, dtype="datetime64[ns]"
             ).astype("int64") // (US_HOUR * 1000)
-            uid = pdf["user_id"].to_numpy(np.int64)
             # floor per EVENT (the engines' expression), then exact
             # integer partial sums — order-free
             us = np.floor(
                 pdf["value"].to_numpy(dtype="float64") * 1000000 + 0.5
             ).astype("int64")
-            order = np.lexsort((hs, uid))
-            uid, hs, us = uid[order], hs[order], us[order]
-            nb = np.ones(len(uid), dtype=bool)
-            nb[1:] = (uid[1:] != uid[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            acc_uid.append(uid[i])
-            acc_hs.append(hs[i])
-            acc_n.append(np.diff(np.append(i, len(uid))).astype("int64"))
-            acc_u.append(np.add.reduceat(us, i).astype("int64"))
-            acc_len += len(i)
-            if acc_len > 2_000_000:
-                fu, fh, fn, fv = _fold()
-                acc_uid[:], acc_hs[:] = [fu], [fh]
-                acc_n[:], acc_u[:] = [fn], [fv]
-                acc_len = len(fu)
-        if acc_uid:
-            fu, fh, fn, fv = _fold()
-            yield pd.DataFrame(
-                {"user_id": fu, "hnum": fh, "n": fn, "u": fv}
-            )
+            comb.add((pdf["user_id"].to_numpy(np.int64), hs), [us])
+        folded = comb.result()
+        if folded is not None:
+            (uid, hs), (u,), n = folded
+            yield pd.DataFrame({"user_id": uid, "hnum": hs, "n": n, "u": u})
 
     partials = stream.mapInPandas(
         presum, schema="user_id long, hnum long, n long, u long"
     )
 
-    def gapfill(key, pdf_iter, state: GroupState):
+    def gapfill(_key, state, pdf):
         # Vectorized kernel: the first cut looped python-per-event and
         # appended python tuples per OUTPUT row — at the 10x smoke that
         # is 1M scalar iterations + 36.7M tuple appends, measured 133 s
@@ -3097,37 +2988,18 @@ def s19_stream_gapfill(
         # the per-event floor runs in the presum combiner (np.floor on
         # float64 is elementwise-identical to math.floor), and the
         # interp expression keeps the exact operand order of both
-        # engines' CAST-DOUBLE arithmetic. One group per state
-        # partition (shard_state): each user's (user, hour) partials
-        # are walked in ascending-hour order as before.
-        (_shard,) = key
+        # engines' CAST-DOUBLE arithmetic.
         su: dict[int, list] = {}  # uid -> [ph, pu, oh, ou, on]
-        if state.exists:
-            cols = (a.tolist() for a in unpack_state(state.get[0]))
-            for u_id, p0, p1, o0, o1, o2 in zip(*cols):
+        if state is not None:
+            for u_id, p0, p1, o0, o1, o2 in zip(*(a.tolist() for a in state)):
                 su[u_id] = [p0, p1, o0, o1, o2]
         # fold this micro-batch's (user, hour, n, units) partials from
         # different scan partitions (order-free integer sums), then
-        # walk per user in ascending hour order (lexsort runs)
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            uid_r = pdf["user_id"].to_numpy(np.int64)
-            hs = pdf["hnum"].to_numpy(np.int64)
-            ns = pdf["n"].to_numpy(np.int64)
-            us = pdf["u"].to_numpy(np.int64)
-            order = np.lexsort((hs, uid_r))
-            uid_r, hs, ns, us = uid_r[order], hs[order], ns[order], us[order]
-            nb = np.ones(len(uid_r), dtype=bool)
-            nb[1:] = (uid_r[1:] != uid_r[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            uid_k = uid_r[i]
-            hour_keys = hs[i]
-            n_per = np.add.reduceat(ns, i).astype("int64")
-            u_per = np.add.reduceat(us, i).astype("int64")
-        else:
-            uid_k = hour_keys = np.empty(0, dtype="int64")
-            n_per = u_per = hour_keys
+        # walk per user in ascending hour order
+        (uid_k, hour_keys), (n_per, u_per), _ = sum_by_keys(
+            (pdf["user_id"].to_numpy(np.int64), pdf["hnum"].to_numpy(np.int64)),
+            [pdf["n"].to_numpy(np.int64), pdf["u"].to_numpy(np.int64)],
+        )
         obs_rows: list[tuple] = []      # (uid, hour, n, units) per closed hour
         gap_runs: list[tuple] = []      # (uid, ph, pu, oh, ou) per closed run
         n_gap = 0
@@ -3153,12 +3025,10 @@ def s19_stream_gapfill(
                 st[0], st[1] = oh, ou
                 st[2], st[3], st[4] = h, u_h, n_h
         uids_o = sorted(su)
-        state.update(
-            (pack_state(uids_o, *([su[u][i] for u in uids_o] for i in range(5))),)
-        )
+        new_state = [uids_o, *([su[u][i] for u in uids_o] for i in range(5))]
         n_out = len(obs_rows) + n_gap
         if not n_out:
-            return
+            return new_state, []
         user_a = np.empty(n_out, dtype="int64")
         hour_a = np.empty(n_out, dtype="int64")
         nobs_a = np.zeros(n_out, dtype="int64")
@@ -3185,29 +3055,19 @@ def s19_stream_gapfill(
                 / float(goh - gph)
             ) / 1000000.0
             i += k
-        yield pd.DataFrame(
-            {
-                "user_id": user_a,
-                "hour_num": hour_a,
-                "n_obs": nobs_a,
-                "locf_val": locf_a,
-                "interp_val": intp_a,
-            }
-        )
+        return new_state, {
+            "user_id": user_a,
+            "hour_num": hour_a,
+            "n_obs": nobs_a,
+            "locf_val": locf_a,
+            "interp_val": intp_a,
+        }
 
-    res = (
-        partials.withColumn("shard", partition_shard("user_id", S19_STATE_PARTITIONS))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            gapfill,
-            outputStructType=(
-                "user_id long, hour_num long, n_obs long, "
-                "locf_val double, interp_val double"
-            ),
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    res = sharded_state(
+        partials.withColumn("shard", partition_shard("user_id", S19_STATE_PARTITIONS)),
+        "shard",
+        "user_id long, hour_num long, n_obs long, locf_val double, interp_val double",
+        gapfill,
     )
     # A row-GENERATING operator's output is corpus-sized (the dense
     # grid is ~10x the event count at 10x scale), so it must leave
@@ -3504,9 +3364,6 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rounding happens engine-side AFTER the stream (never in the UDF —
     the a5 rule); raw doubles cross the sink."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from sparkstreaming_mq_spark.operators.aggregates import (
         QS_CAPACITY,
         _qs_from_values,
@@ -3522,37 +3379,30 @@ def t18_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def update_sketch(key, pdf_iter, state: GroupState):
+    def update_sketch(key, state, pdf):
         (week,) = key
-        if state.exists:
-            n_a, *levels = unpack_state(state.get[0])
+        if state is not None:
+            n_a, *levels = state
             n, levels = int(n_a[0]), [lvl.view("<f8") for lvl in levels]
         else:
             n, levels = 0, []
-        chunks = list(pdf_iter)
-        if chunks:
-            vals = pd.concat(chunks)["value"].to_numpy()
-            batch_levels, _ = _qs_from_values(vals, QS_CAPACITY)
-            merged, _ = _qs_merge(
-                ([levels] if levels else []) + [batch_levels], QS_CAPACITY
-            )
-            n += len(vals)
-            state.update((pack_state([n], *merged),))
-            yield pd.DataFrame(
-                {
-                    "week": [week],
-                    "n_vals": [n],
-                    "p50": [_qs_quantile(merged, 0.5)],
-                    "p90": [_qs_quantile(merged, 0.9)],
-                }
-            )
+        vals = pdf["value"].to_numpy()
+        batch_levels, _ = _qs_from_values(vals, QS_CAPACITY)
+        merged, _ = _qs_merge(([levels] if levels else []) + [batch_levels], QS_CAPACITY)
+        n += len(vals)
+        return [[n], *merged], {
+            "week": [week],
+            "n_vals": [n],
+            "p50": [_qs_quantile(merged, 0.5)],
+            "p90": [_qs_quantile(merged, 0.9)],
+        }
 
-    out = stream.groupBy("week").applyInPandasWithState(
+    out = sharded_state(
+        stream,
+        "week",
+        "week timestamp, n_vals long, p50 double, p90 double",
         update_sketch,
-        outputStructType="week timestamp, n_vals long, p50 double, p90 double",
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        mode="update",
     )
     res = run_stream_to_table(out, "update")
     # final estimate per week = the emission carrying the full sketch
@@ -4049,59 +3899,23 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     not its event count."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stream = read_events_stream_chunked(
         spark, sf_dir, n_chunks=4, order="time"
     ).select("user_id", "ts")
 
     def precount(batch_iter):
-        # stateless per-PARTITION partial counts, accumulated across the
-        # Arrow batch iterator (_a18_partials-style; ADVICE r13) — the
-        # hand-built map-side combiner (runs BEFORE the shard exchange).
-        # Emitting once per partition (not per Arrow batch) keeps the
-        # state-bound traffic O(scan partitions × windows × users), not
-        # × Arrow-batch count; the buffer compresses past a bound so
-        # kernel memory stays O(distinct (wb, user) of the partition).
-        acc_wb: list = []
-        acc_uid: list = []
-        acc_cnt: list = []
-        acc_len = 0
-
-        def _fold():
-            wb = np.concatenate(acc_wb)
-            uid = np.concatenate(acc_uid)
-            cnt = np.concatenate(acc_cnt)
-            order = np.lexsort((uid, wb))
-            wb, uid, cnt = wb[order], uid[order], cnt[order]
-            nb = np.ones(len(wb), dtype=bool)
-            nb[1:] = (wb[1:] != wb[:-1]) | (uid[1:] != uid[:-1])
-            i = np.flatnonzero(nb)
-            return wb[i], uid[i], np.add.reduceat(cnt, i).astype("int64")
-
+        # stateless per-PARTITION partial counts (the hand-built
+        # map-side combiner, run BEFORE the shard exchange)
+        comb = Combiner()
         for pdf in batch_iter:
-            if not len(pdf):
-                continue
             us = np.asarray(
                 pdf["ts"].values, dtype="datetime64[ns]"
             ).astype("int64") // 1000
-            wb = us // T22_WINDOW_US
-            uid = pdf["user_id"].to_numpy(np.int64)
-            order = np.lexsort((uid, wb))
-            wb, uid = wb[order], uid[order]
-            nb = np.ones(len(wb), dtype=bool)
-            nb[1:] = (wb[1:] != wb[:-1]) | (uid[1:] != uid[:-1])
-            i = np.flatnonzero(nb)
-            acc_wb.append(wb[i])
-            acc_uid.append(uid[i])
-            acc_cnt.append(np.diff(np.append(i, len(wb))).astype("int64"))
-            acc_len += len(i)
-            if acc_len > 2_000_000:
-                fwb, fuid, fcnt = _fold()
-                acc_wb[:], acc_uid[:], acc_cnt[:] = [fwb], [fuid], [fcnt]
-                acc_len = len(fwb)
-        if acc_wb:
-            fwb, fuid, fcnt = _fold()
+            comb.add((us // T22_WINDOW_US, pdf["user_id"].to_numpy(np.int64)))
+        folded = comb.result()
+        if folded is not None:
+            (fwb, fuid), _, fcnt = folded
             yield pd.DataFrame(
                 {
                     "shard": fuid % T22_SHARDS,  # np % == pmod for int64
@@ -4115,10 +3929,10 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         precount, schema="shard long, wb long, user_id long, cnt long"
     )
 
-    def topk(key, pdf_iter, state: GroupState):
+    def topk(key, state, pdf):
         (shard,) = key
-        if state.exists:
-            wb_a, uids, cnts = unpack_state(state.get[0])
+        if state is not None:
+            wb_a, uids, cnts = state
             open_wb = int(wb_a[0])
             # normalize the persisted -1 sentinel back to None (the s21
             # rule; ADVICE r13) so a future refactor that persists
@@ -4152,57 +3966,37 @@ def t22_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     cs[uid] = evict[1] + c
             return cs
 
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            # fold the scan-partition partials of this micro-batch to
-            # one exact count per (wb, user) — additive, so identical
-            # to counting the raw events
-            wbs = pdf["wb"].to_numpy(np.int64)
-            uid_arr = pdf["user_id"].to_numpy(np.int64)
-            cnt_arr = pdf["cnt"].to_numpy(np.int64)
-            order = np.lexsort((uid_arr, wbs))
-            wbs, uid_arr, cnt_arr = wbs[order], uid_arr[order], cnt_arr[order]
-            nb = np.ones(len(wbs), dtype=bool)
-            nb[1:] = (wbs[1:] != wbs[:-1]) | (uid_arr[1:] != uid_arr[:-1])
-            starts = np.flatnonzero(nb)
-            agg_c = np.add.reduceat(cnt_arr, starts) if len(starts) else cnt_arr
-            wbs_u, uid_u = wbs[starts], uid_arr[starts]
-            for wb in np.unique(wbs_u):  # ascending
-                sel = wbs_u == wb
-                wb = int(wb)
-                if open_wb is not None and wb > open_wb:
-                    close(open_wb, counters)
-                    counters = {}
-                open_wb = wb
-                counters = merge(
-                    counters,
-                    zip(uid_u[sel].tolist(), agg_c[sel].tolist()),
-                )
-        items = sorted(counters.items())
-        state.update(
-            (
-                pack_state(
-                    [open_wb if open_wb is not None else -1],
-                    [u for u, _ in items],
-                    [c for _, c in items],
-                ),
-            )
+        # fold the scan-partition partials of this micro-batch to one
+        # exact count per (wb, user) — additive, so identical to
+        # counting the raw events
+        (wbs_u, uid_u), (agg_c,), _ = sum_by_keys(
+            (pdf["wb"].to_numpy(np.int64), pdf["user_id"].to_numpy(np.int64)),
+            [pdf["cnt"].to_numpy(np.int64)],
         )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=["shard", "window_num", "user_id", "n_events", "rk"],
+        for wb in np.unique(wbs_u):  # ascending
+            sel = wbs_u == wb
+            wb = int(wb)
+            if open_wb is not None and wb > open_wb:
+                close(open_wb, counters)
+                counters = {}
+            open_wb = wb
+            counters = merge(
+                counters,
+                zip(uid_u[sel].tolist(), agg_c[sel].tolist()),
             )
+        items = sorted(counters.items())
+        new_state = [
+            [open_wb if open_wb is not None else -1],
+            [u for u, _ in items],
+            [c for _, c in items],
+        ]
+        return new_state, out_rows
 
-    out = partials.groupBy("shard").applyInPandasWithState(
+    out = sharded_state(
+        partials,
+        "shard",
+        "shard long, window_num long, user_id long, n_events long, rk long",
         topk,
-        outputStructType=(
-            "shard long, window_num long, user_id long, n_events long, rk long"
-        ),
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return run_stream_to_table(out, "append")
 
@@ -4277,9 +4071,10 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-built map-side combine stateful ops don't get): hourly sums
     are additive integers, so the kernel folds partials exactly as it
     folded raw events and the oracle is unchanged."""
+    from bisect import bisect_left
+
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stream = read_events_stream_chunked(
         spark, sf_dir, n_chunks=4, order="time"
@@ -4288,95 +4083,47 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     US_HOUR = 3_600_000_000
 
     def presum(batch_iter):
-        # accumulated across the partition's Arrow batch iterator and
-        # emitted ONCE per partition (_a18_partials-style; ADVICE r13):
-        # user-exchange traffic is O(scan partitions × users × hours),
-        # never × Arrow-batch count. Compress bound as in t22.
-        acc_uid: list = []
-        acc_hs: list = []
-        acc_u: list = []
-        acc_len = 0
-
-        def _fold():
-            uid = np.concatenate(acc_uid)
-            hs = np.concatenate(acc_hs)
-            u = np.concatenate(acc_u)
-            order = np.lexsort((hs, uid))
-            uid, hs, u = uid[order], hs[order], u[order]
-            nb = np.ones(len(uid), dtype=bool)
-            nb[1:] = (uid[1:] != uid[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            return uid[i], hs[i], np.add.reduceat(u, i).astype("int64")
-
+        comb = Combiner()
         for pdf in batch_iter:
-            if not len(pdf):
-                continue
             hs = np.asarray(
                 pdf["ts"].values, dtype="datetime64[ns]"
             ).astype("int64") // (US_HOUR * 1000)
-            uid = pdf["user_id"].to_numpy(np.int64)
             # floor per EVENT (the engines' expression), then exact
             # integer partial sums — order-free
             us = np.floor(
                 pdf["value"].to_numpy(dtype="float64") * 1000000 + 0.5
             ).astype("int64")
-            order = np.lexsort((hs, uid))
-            uid, hs, us = uid[order], hs[order], us[order]
-            nb = np.ones(len(uid), dtype=bool)
-            nb[1:] = (uid[1:] != uid[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            acc_uid.append(uid[i])
-            acc_hs.append(hs[i])
-            acc_u.append(np.add.reduceat(us, i).astype("int64"))
-            acc_len += len(i)
-            if acc_len > 2_000_000:
-                fu, fh, fv = _fold()
-                acc_uid[:], acc_hs[:], acc_u[:] = [fu], [fh], [fv]
-                acc_len = len(fu)
-        if acc_uid:
-            fu, fh, fv = _fold()
-            yield pd.DataFrame({"user_id": fu, "hnum": fh, "u": fv})
+            comb.add((pdf["user_id"].to_numpy(np.int64), hs), [us])
+        folded = comb.result()
+        if folded is not None:
+            (uid, hs), (u,), _ = folded
+            yield pd.DataFrame({"user_id": uid, "hnum": hs, "u": u})
 
     partials = stream.mapInPandas(
         presum, schema="user_id long, hnum long, u long"
     )
 
-    def ewma(key, pdf_iter, state: GroupState):
-        # one group per state partition (shard_state), holding every
-        # user's trailing sums as flattened parallel arrays
-        (_shard,) = key
+    def ewma(_key, state, pdf):
+        # every user's trailing sums as flattened parallel arrays
         per_user: dict[int, list] = {}
-        if state.exists:
-            cols = unpack_state(state.get[0])
-            uids_a, hcnt_a, hrs_f, uns_f, oh_a, ou_a = (a.tolist() for a in cols)
+        if state is not None:
+            uids_a, hcnt_a, hrs_f, uns_f, oh_a, ou_a = (a.tolist() for a in state)
             pos = 0
             for u_id, hc, oh_v, ou_v in zip(uids_a, hcnt_a, oh_a, ou_a):
                 per_user[u_id] = [
-                    list(hrs_f[pos : pos + hc]),
-                    list(uns_f[pos : pos + hc]),
+                    hrs_f[pos : pos + hc],
+                    uns_f[pos : pos + hc],
                     oh_v if oh_v >= 0 else None,
                     ou_v,
                 ]
                 pos += hc
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            uid = pdf["user_id"].to_numpy(np.int64)
-            hs = pdf["hnum"].to_numpy(np.int64)
-            us = pdf["u"].to_numpy(np.int64)
-            # fold duplicate (user, hour) partials from different scan
-            # partitions, then walk each user's hours in order — the
-            # same order-free integer merge the per-user form did
-            order = np.lexsort((hs, uid))
-            uid, hs, us = uid[order], hs[order], us[order]
-            nb = np.ones(len(uid), dtype=bool)
-            nb[1:] = (uid[1:] != uid[:-1]) | (hs[1:] != hs[:-1])
-            i = np.flatnonzero(nb)
-            uid_k = uid[i]
-            hour_k = hs[i]
-            u_per = np.add.reduceat(us, i).astype("int64")
-        else:
-            uid_k = hour_k = u_per = np.empty(0, dtype="int64")
+        # fold duplicate (user, hour) partials from different scan
+        # partitions, then walk each user's hours in order — the same
+        # order-free integer merge the per-user form did
+        (uid_k, hour_k), (u_per,), _ = sum_by_keys(
+            (pdf["user_id"].to_numpy(np.int64), pdf["hnum"].to_numpy(np.int64)),
+            [pdf["u"].to_numpy(np.int64)],
+        )
         out: list[tuple] = []
         for u_id, h, u_h in zip(uid_k.tolist(), hour_k.tolist(), u_per.tolist()):
             st = per_user.get(u_id)
@@ -4401,10 +4148,8 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # prune past the horizon of any FUTURE closing hour
                 # (the next closure is > oh, so hr < oh - LAGS + 1 can
                 # never contribute again); bounds state at <= 25 pairs
-                while hrs and hrs[0] < h - S21_LAGS:
-                    hrs.pop(0)
-                    uns.pop(0)
-                st[2], st[3] = h, u_h
+                cut = bisect_left(hrs, h - S21_LAGS)
+                st[0], st[1], st[2], st[3] = hrs[cut:], uns[cut:], h, u_h
         uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o = [], [], [], [], [], []
         for u_id in sorted(per_user):
             hrs, uns, oh, ou = per_user[u_id]
@@ -4414,11 +4159,7 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             uns_o.extend(uns)
             oh_o.append(oh if oh is not None else -1)
             ou_o.append(ou)
-        state.update((pack_state(uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "hour_num", "units_now", "ewma_scaled"]
-            )
+        return [uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o], out
 
     # State work is input-sized (per-user python over ~15k users at
     # sf0.1), so the 2-partition tiny-state profile serializes it onto
@@ -4434,17 +4175,10 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
 
     s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
-    res = (
-        partials.withColumn("shard", partition_shard("user_id", s21_parts))
-        .groupBy("shard")
-        .applyInPandasWithState(
-            ewma,
-            outputStructType=(
-                "user_id long, hour_num long, units_now long, ewma_scaled long"
-            ),
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    res = sharded_state(
+        partials.withColumn("shard", partition_shard("user_id", s21_parts)),
+        "shard",
+        "user_id long, hour_num long, units_now long, ewma_scaled long",
+        ewma,
     )
     return run_stream_to_table(res, "append", state_partitions=s21_parts)

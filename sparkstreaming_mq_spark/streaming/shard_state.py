@@ -1,6 +1,29 @@
-"""Packed state and partition-aligned shard keys for the
-``applyInPandasWithState`` operators (t7, t17, s19, s21; t18 and t22
-use the packing only).
+"""One idiom for the stateful stream operators: shard-keyed packed
+state, one partial-sum fold and one map-side combiner.
+
+Which operator uses which helper:
+
+- ``sharded_state`` runs all seven ``applyInPandasWithState`` operators
+  (t7, s14, t17, s19, t18, t22, s21). Each operator keeps only its
+  ``step`` state machine.
+- ``partition_shard`` keys t7, s14, t17, s19 and s21. t18 is keyed by
+  week and t22 by ``user_id % T22_SHARDS`` (its oracle encodes that key).
+- ``sum_by_keys`` is the one "lexsort on int64 keys, run starts,
+  ``np.add.reduceat``" fold: the in-step folds of s19/t22/s21, a18's
+  pair buffer and l49's pair slices.
+- ``Combiner`` is the map-side combine that Spark does not give a
+  stateful operator: s19/t22/s21 pre-sum their partitions before the
+  state exchange, and l49 folds its pair slices with it.
+
+The ``step`` contract: ``step(key, state, pdf) -> (new_state, out)``.
+``key`` is the grouping-key tuple. ``state`` is the list of int64
+arrays of the group's last ``pack_state`` (float64 arrays as bit
+patterns), or None on the group's first batch. ``pdf`` holds the
+group's rows of this micro-batch: its Arrow chunks concatenated BEFORE
+the sort on ``sort`` (a per-chunk sort lets a user's events move
+backward across chunk boundaries once a group's batch exceeds
+``arrow.maxRecordsPerBatch``). ``new_state`` is the arrays to pack;
+``out`` is row tuples or a dict of columns, in ``out_schema`` order.
 
 State is ONE ``binary`` column of little-endian int64: a header (the
 array count, then each array's length) followed by the values; float64
@@ -31,7 +54,7 @@ from functools import cache
 
 import numpy as np
 from pyspark import cloudpickle
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # The state functions run inside UDF closures. Pickle them by value, so
@@ -40,6 +63,7 @@ from pyspark.sql import functions as F
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 STATE_SCHEMA = "blob binary"
+COMBINE_AT = 2_000_000  # buffered partial rows before a Combiner re-folds
 
 
 def pack_state(*arrays) -> bytes:
@@ -112,3 +136,99 @@ def partition_shard(col, n: int) -> Column:
     ``n``-way hash exchange: ``labels[pmod(col, n)]``."""
     labels = F.array(*[F.lit(v).cast("long") for v in shard_labels(n)])
     return labels[F.pmod(col, F.lit(n)).cast("int")]
+
+
+def sharded_state(
+    df: DataFrame,
+    key_col: str,
+    out_schema: str,
+    step,
+    sort: list[str] | None = None,
+    mode: str = "append",
+) -> DataFrame:
+    """``df.groupBy(key_col).applyInPandasWithState`` over packed state,
+    with ``step`` as the state machine (the contract is in the module
+    docstring). ``out_schema`` is a flat DDL string."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    names = [c.split()[0] for c in out_schema.split(",")]
+
+    def run(key, pdf_iter, state):
+        import pandas as pd
+
+        chunks = list(pdf_iter)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
+        if sort:
+            pdf = pdf.sort_values(sort)
+        old = unpack_state(state.get[0]) if state.exists else None
+        new, out = step(key, old, pdf)
+        state.update((pack_state(*new),))
+        out = pd.DataFrame(out, columns=names)
+        if len(out):
+            yield out
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=STATE_SCHEMA,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def sum_by_keys(keys, values=()):
+    """Fold rows that share a key tuple. ``keys`` are equal-length int64
+    arrays, the first the primary sort key; ``values`` are integer arrays
+    to sum. Returns the unique key tuples in ascending order (a list of
+    arrays), the per-key int64 sums of each ``values`` array, and the
+    per-key row counts."""
+    order = np.lexsort(keys[::-1])
+    keys = [k[order] for k in keys]
+    run_start = np.zeros(len(order), dtype=bool)
+    run_start[:1] = True
+    for k in keys:
+        run_start[1:] |= k[1:] != k[:-1]
+    starts = np.flatnonzero(run_start)
+    sums = [np.add.reduceat(v[order], starts).astype(np.int64, copy=False) for v in values]
+    return [k[starts] for k in keys], sums, np.diff(np.append(starts, len(order)))
+
+
+class Combiner:
+    """Per-partition partial sums. ``add`` folds one batch with
+    ``sum_by_keys`` and buffers the partials; whenever more than
+    ``bound`` partial rows are buffered they are re-folded, so memory
+    stays O(distinct keys of the partition). ``result`` is the
+    partition's ``(keys, sums, counts)``, counts summed over the raw
+    rows, or None when no row was added: a partition emits once, so the
+    state exchange moves O(partitions x keys) rows, never O(events) and
+    never x Arrow-batch count."""
+
+    def __init__(self, bound: int = COMBINE_AT):
+        self.bound = bound
+        self.parts: list[tuple[list, list]] = []  # (keys, [*sums, counts])
+        self.rows = 0
+
+    def add(self, keys, values=()) -> None:
+        if not len(keys[0]):
+            return
+        uk, sums, counts = sum_by_keys(keys, values)
+        self.parts.append((uk, [*sums, counts]))
+        self.rows += len(counts)
+        if self.rows > self.bound:
+            self.parts = [self._fold()]
+            self.rows = len(self.parts[0][0][0])
+
+    def _fold(self) -> tuple[list, list]:
+        if len(self.parts) == 1:
+            return self.parts[0]
+        keys, sums = ([np.concatenate(c) for c in zip(*cols)] for cols in zip(*self.parts))
+        uk, sums, _ = sum_by_keys(keys, sums)
+        return uk, sums
+
+    def result(self):
+        if not self.parts:
+            return None
+        keys, sums = self._fold()
+        return keys, sums[:-1], sums[-1]

@@ -1,5 +1,6 @@
-"""Packed binary state and partition-aligned shard keys of the
-``applyInPandasWithState`` operators (``streaming/shard_state.py``)."""
+"""Packed binary state, partition-aligned shard keys, the partial-sum
+fold and the map-side combiner of the stateful stream operators
+(``streaming/shard_state.py``)."""
 
 from __future__ import annotations
 
@@ -16,14 +17,92 @@ from pyspark.sql import functions as F
 
 from sparkstreaming_mq_spark.oracle import canon_frame
 from sparkstreaming_mq_spark.streaming.shard_state import (
+    Combiner,
     hash_long,
     pack_state,
     partition_shard,
     shard_labels,
+    sum_by_keys,
     unpack_state,
 )
 
 I64_MIN, I64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _random_rows(rng, n: int, n_keys: int, n_values: int):
+    """Int64 key columns drawn from a small pool (so keys repeat, and
+    rows share a primary key with different secondaries), including
+    negatives and both int64 extremes; small int64 values."""
+    pool = np.array([I64_MIN, I64_MIN + 1, -7, -1, 0, 1, 3, I64_MAX - 1, I64_MAX])
+    keys = [rng.choice(pool, n) for _ in range(n_keys)]
+    values = [rng.integers(-1000, 1000, n, dtype=np.int64) for _ in range(n_values)]
+    return keys, values
+
+
+def _pandas_fold(keys, values):
+    """The reference: ``groupby(keys).sum()`` and ``.size()``."""
+    cols = {f"k{j}": k for j, k in enumerate(keys)}
+    cols.update({f"v{j}": v for j, v in enumerate(values)})
+    g = pd.DataFrame(cols).groupby([f"k{j}" for j in range(len(keys))], sort=True)
+    size = g.size()
+    idx = size.index.to_frame(index=False)
+    sums = g[[f"v{j}" for j in range(len(values))]].sum() if values else None
+    return (
+        [idx[f"k{j}"].to_numpy(np.int64) for j in range(len(keys))],
+        [sums[f"v{j}"].to_numpy(np.int64) for j in range(len(values))],
+        size.to_numpy(np.int64),
+    )
+
+
+def _assert_fold_equal(got, want):
+    (gk, gs, gc), (wk, ws, wc) = got, want
+    assert [k.tolist() for k in gk] == [k.tolist() for k in wk]
+    assert [v.tolist() for v in gs] == [v.tolist() for v in ws]
+    assert gc.tolist() == wc.tolist()
+    assert all(a.dtype == np.int64 for a in [*gk, *gs, gc])
+
+
+@pytest.mark.parametrize("n_keys,n_values", [(1, 1), (2, 0), (2, 1), (2, 2), (3, 1)])
+def test_sum_by_keys_matches_pandas_groupby(n_keys, n_values):
+    rng = np.random.default_rng(n_keys * 10 + n_values)
+    keys, values = _random_rows(rng, 5000, n_keys, n_values)
+    _assert_fold_equal(sum_by_keys(keys, values), _pandas_fold(keys, values))
+
+
+def test_sum_by_keys_empty_and_single_row():
+    empty = np.empty(0, dtype=np.int64)
+    (k1, k2), (s,), c = sum_by_keys((empty, empty), [empty])
+    assert [len(k1), len(k2), len(s), len(c)] == [0, 0, 0, 0]
+    one = [np.array([I64_MIN]), np.array([I64_MAX])]
+    _assert_fold_equal(
+        sum_by_keys(one, [np.array([-5])]),
+        ([np.array([I64_MIN]), np.array([I64_MAX])], [np.array([-5])], np.array([1])),
+    )
+
+
+def test_combiner_refolds_past_its_bound_and_emits_once():
+    rng = np.random.default_rng(7)
+    batches = [_random_rows(rng, n, 2, 1) for n in (40, 0, 1, 25, 60, 3)]
+    keys = [np.concatenate([b[0][j] for b in batches]) for j in range(2)]
+    values = [np.concatenate([b[1][0] for b in batches])]
+    for bound, n_parts in ((20, 1), (10**9, 5)):
+        comb = Combiner(bound=bound)
+        for batch_keys, batch_values in batches:
+            comb.add(batch_keys, batch_values)
+        # past the bound every add re-folds the buffer into one part
+        assert len(comb.parts) == n_parts
+        _assert_fold_equal(comb.result(), _pandas_fold(keys, values))
+
+
+def test_combiner_without_rows_emits_nothing():
+    comb = Combiner(bound=4)
+    assert comb.result() is None
+    empty = np.empty(0, dtype=np.int64)
+    comb.add((empty, empty), [empty])
+    assert comb.result() is None
+    comb.add((np.array([2, 2]), np.array([-1, -1])))
+    (k1, k2), sums, counts = comb.result()
+    assert (k1.tolist(), k2.tolist(), sums, counts.tolist()) == ([2], [-1], [], [2])
 
 
 def test_pack_round_trips_int64_arrays():
@@ -105,7 +184,16 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-@pytest.mark.parametrize("name", ["s21_stream_ewma", "t22_stream_heavy_hitters"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s21_stream_ewma",
+        "t22_stream_heavy_hitters",
+        "t7_stateful_sessionize",
+        "t17_stream_attribution",
+        "s14_stream_incremental_dedup",
+    ],
+)
 def test_rerun_compiles_no_new_code(spark, sf_dir, name):
     """A stateful query re-planned with the same shape must hit Spark's
     codegen cache. Array-typed state columns made the state encoder's
@@ -124,7 +212,15 @@ def _digest(pdf: pd.DataFrame) -> str:
     return hashlib.sha256(repr(canon_frame(pdf)).encode()).hexdigest()
 
 
-@pytest.mark.parametrize("name", ["s21_stream_ewma", "t7_stateful_sessionize"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s21_stream_ewma",
+        "t7_stateful_sessionize",
+        "t17_stream_attribution",
+        "t22_stream_heavy_hitters",
+    ],
+)
 def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name):
     """The query over the first two replay chunks, then over all four
     from the same checkpoint (the s9_checkpoint_recovery pattern): the
