@@ -28,7 +28,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2:]
 
-    spark = get_spark(shuffle_partitions=8)
+    # no console progress bar: its \r-rewritten "[Stage N: ...]" text would
+    # share a stdout line with the next PASS/FAIL line
+    spark = get_spark(
+        shuffle_partitions=8, extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb_connect(sf_dir)
 
     qs = registry.all_queries()

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from sparkstreaming_mq_spark.registry import query
 from sparkstreaming_mq_spark.streaming.sources import (
     STREAM_SHUFFLE_PARTITIONS,
+    _await_then_drop_checkpoint,
+    input_sized_partitions,
     read_docs_stream_chunked,
     read_events_stream,
     read_events_stream_chunked,
@@ -592,7 +594,7 @@ def s2_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(once=True)
         .start()
     )
-    q.awaitTermination()
+    _await_then_drop_checkpoint(q, ckpt, True)
     return spark.table(name)
 
 
@@ -1102,7 +1104,7 @@ def t10_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    _await_then_drop_checkpoint(q, ckpt, True)
     rows = [
         (int(p["batchId"]), int(p["numInputRows"]))
         for p in (q.recentProgress or [])
@@ -2908,7 +2910,7 @@ def s19_stream_gapfill(
     toward a partial endpoint). Hours that straddle a batch boundary
     merge into the open slot instead of emitting.
 
-    Like t22/s21, a STATELESS mapInPandas pre-sums (user, hour) →
+    Like t22, a STATELESS mapInPandas pre-sums (user, hour) →
     (count, micro-units) partials per scan partition BEFORE the user
     exchange (the hand-built map-side combine stateful ops don't get):
     both per-hour aggregates are additive integers, so the kernel
@@ -2930,23 +2932,8 @@ def s19_stream_gapfill(
         spark, sf_dir, n_chunks=n_chunks, order="time"
     ).select("user_id", "ts", "value")
 
-    # Row generation is OUTPUT-dominated, the opposite cost profile of
-    # the tiny-state aggregates the 2-partition fixture profile was
-    # laddered for — at the 10x corpus parallel generation/encode wins
-    # big (r7 ladder: 2 partitions 112 s, 8 -> 33 s, 32 -> 16 s). But
-    # the r13 stage profile measured today's micro-batch stages 99%
-    # WAIT (runTime 70-500 s vs cpuTime 1.5-8 s, zero spill): each
-    # state partition pays a fixed per-micro-batch worker/store wait,
-    # so at sf0.1 a frozen 32 was paying 128 waits to encode 2 MB per
-    # batch — the interleaved fresh-session ladder read 32 parts at
-    # 19.6-35.8 s vs 8-16 parts at 8.4-16.2 s (medians). Size the
-    # count to the input instead: ~12.5k events per state partition,
-    # clamped to [4, 32] — sf0.1 -> 8, the 10x corpus -> 32 (both
-    # regimes keep their measured winner). A real cluster sizes this to
-    # its parallelism before first run (frozen into the checkpoint).
-    from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
-
-    S19_STATE_PARTITIONS = min(32, max(4, _rowcount(sf_dir, "events") // 12_500))
+    # row generation is output-sized: see input_sized_partitions
+    S19_STATE_PARTITIONS = input_sized_partitions(sf_dir, 12_500)
 
     US_HOUR = 3_600_000_000
     NO_PREV = -1  # sentinel: no closed hour in state yet
@@ -4066,41 +4053,23 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas), dyadic shifts in exact Python ints, the same widened
     convolution SQL as ts7 plus the cut.
 
-    Like t22, a STATELESS mapInPandas pre-sums (user, hour) micro-unit
-    partials per scan partition before the user exchange (the
-    hand-built map-side combine stateful ops don't get): hourly sums
-    are additive integers, so the kernel folds partials exactly as it
-    folded raw events and the oracle is unchanged."""
+    No map-side combine: at sf0.01 10,000 events fall into 9,567
+    (user, hour) keys and at sf0.1 100,000 into 95,583, so a Python
+    pre-sum stage would cut 4 % of the rows for one Python task per
+    scan partition. The hour and the micro-units are Catalyst columns
+    (the oracle's expressions, in the same IEEE order), and the
+    kernel's ``sum_by_keys`` folds each micro-batch's (user, hour)
+    rows."""
     from bisect import bisect_left
 
     import numpy as np
-    import pandas as pd
 
     stream = read_events_stream_chunked(
         spark, sf_dir, n_chunks=4, order="time"
-    ).select("user_id", "ts", "value")
-
-    US_HOUR = 3_600_000_000
-
-    def presum(batch_iter):
-        comb = Combiner()
-        for pdf in batch_iter:
-            hs = np.asarray(
-                pdf["ts"].values, dtype="datetime64[ns]"
-            ).astype("int64") // (US_HOUR * 1000)
-            # floor per EVENT (the engines' expression), then exact
-            # integer partial sums — order-free
-            us = np.floor(
-                pdf["value"].to_numpy(dtype="float64") * 1000000 + 0.5
-            ).astype("int64")
-            comb.add((pdf["user_id"].to_numpy(np.int64), hs), [us])
-        folded = comb.result()
-        if folded is not None:
-            (uid, hs), (u,), _ = folded
-            yield pd.DataFrame({"user_id": uid, "hnum": hs, "u": u})
-
-    partials = stream.mapInPandas(
-        presum, schema="user_id long, hnum long, u long"
+    ).select(
+        "user_id",
+        F.expr("unix_micros(ts) div 3600000000").alias("hnum"),
+        F.expr("CAST(floor(value * 1000000 + 0.5) AS BIGINT)").alias("u"),
     )
 
     def ewma(_key, state, pdf):
@@ -4117,9 +4086,8 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ou_v,
                 ]
                 pos += hc
-        # fold duplicate (user, hour) partials from different scan
-        # partitions, then walk each user's hours in order — the same
-        # order-free integer merge the per-user form did
+        # fold the batch's (user, hour) rows, then walk each user's
+        # hours in order — order-free integer sums
         (uid_k, hour_k), (u_per,), _ = sum_by_keys(
             (pdf["user_id"].to_numpy(np.int64), pdf["hnum"].to_numpy(np.int64)),
             [pdf["u"].to_numpy(np.int64)],
@@ -4161,22 +4129,10 @@ def s21_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             ou_o.append(ou)
         return [uids_o, hcnt_o, hrs_o, uns_o, oh_o, ou_o], out
 
-    # State work is input-sized (per-user python over ~15k users at
-    # sf0.1), so the 2-partition tiny-state profile serializes it onto
-    # two tasks — size state partitions to the input like s19 (rows //
-    # per-partition target, clamped). Measured fresh-session mins
-    # (query_profile, r14, per-user state groups): sf0.1 2p 11.1 s,
-    # 4p 8.6 s, 8p 11.7 s; 10x corpus 2p 36.7 s, 32p 14.9 s — the
-    # 25k-events-per-partition divisor keeps both regimes on their
-    # measured winner. Emission is partition-count-invariant, so the
-    # oracle is unchanged. The floor of 4 re-measured at sf0.01 once
-    # checkpoint files stopped forking chmod/readlink (4 vCPUs, warm
-    # medians of 4): 2p 2.00 s, 4p 1.99 s — a tie.
-    from sparkstreaming_mq_spark.tables import table_rowcount as _rowcount
-
-    s21_parts = min(32, max(4, _rowcount(sf_dir, "events") // 25_000))
+    # per-user state work is input-sized: see input_sized_partitions
+    s21_parts = input_sized_partitions(sf_dir, 25_000)
     res = sharded_state(
-        partials.withColumn("shard", partition_shard("user_id", s21_parts)),
+        stream.withColumn("shard", partition_shard("user_id", s21_parts)),
         "shard",
         "user_id long, hour_num long, units_now long, ewma_scaled long",
         ewma,

@@ -12,8 +12,9 @@ Which operator uses which helper:
   ``np.add.reduceat``" fold: the in-step folds of s19/t22/s21, a18's
   pair buffer and l49's pair slices.
 - ``Combiner`` is the map-side combine that Spark does not give a
-  stateful operator: s19/t22/s21 pre-sum their partitions before the
-  state exchange, and l49 folds its pair slices with it.
+  stateful operator. Its users are s19, t22 and l49: s19 and t22
+  pre-sum their partitions before the state exchange, and l49 folds its
+  pair slices with it.
 
 The ``step`` contract: ``step(key, state, pdf) -> (new_state, out)``.
 ``key`` is the grouping-key tuple. ``state`` is the list of int64

@@ -14,7 +14,9 @@ plays the role of ``maxOffsetsPerTrigger`` for bounded micro-batches.
 
 from __future__ import annotations
 
+import math
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -30,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from sparkstreaming_mq_spark.session import apply_runtime_conf
-from sparkstreaming_mq_spark.tables import cache_key, load_table
+from sparkstreaming_mq_spark.tables import cache_key, load_table, table_rowcount
 
 # Schema of the materialized replay files: ``tables.load_table`` has
 # already converted the fixture's ns-long ts to a µs TimestampType
@@ -258,17 +260,35 @@ def read_docs_stream_chunked(
 STREAM_SHUFFLE_PARTITIONS = 2
 
 
+# State-partition count for the stateful operators whose state work
+# grows with the input (s19's generated grid, s21's per-user hours):
+# one partition per ``events_per_partition`` events, at most 32, with
+# no floor. Every state partition is one stateful task per micro-batch,
+# and each such task costs ~35 ms of JVM CPU (codegen, state store
+# open/commit, task serde) whatever its row count: a warm s21 run at
+# sf0.01 (10k events, 4 micro-batches, 4 vCPUs) used 1.48 / 1.59 /
+# 1.89 / 2.48 s of JVM CPU on 1 / 2 / 4 / 8 partitions (medians of 6).
+# At scale the data dominates and wider wins (fresh-session mins: s21
+# at sf0.1 2p 11.1 s, 4p 8.6 s, 8p 11.7 s, and at the 10x corpus
+# 2p 36.7 s, 32p 14.9 s; s19 at the 10x corpus 2p 112 s, 8p 33 s,
+# 32p 16 s, and at sf0.1 8-16p 8.4-16.2 s against 32p 19.6-35.8 s).
+# s21's target of 25k and s19's 12.5k events per partition keep sf0.1
+# at 4 and 8 and the 10x corpus at 32. A real cluster sizes this to its
+# parallelism before the first run: the count is frozen into the
+# checkpoint.
+def input_sized_partitions(sf_dir: str, events_per_partition: int) -> int:
+    events = table_rowcount(sf_dir, "events")
+    return min(32, max(1, math.ceil(events / events_per_partition)))
+
+
 class _stream_partitions:
     """Temporarily pin spark.sql.shuffle.partitions for a streaming
     run (the stateful operator freezes the value at query start)."""
 
     def __init__(self, spark: SparkSession, n: int | None = None):
         self.spark = spark
-        # None -> the tiny-state fixture profile. Output-heavy stateful
-        # operators (s19's row generation) pass their own count: their
-        # cost is writing the generated rows, not state maintenance,
-        # so MORE partitions win at every measured scale (s19 10x:
-        # 2 -> 112 s, 8 -> 33 s, 32 -> 16 s; gates insensitive).
+        # None -> the tiny-state fixture profile; s19 and s21 pass
+        # input_sized_partitions
         self.n = STREAM_SHUFFLE_PARTITIONS if n is None else n
 
     def __enter__(self):
@@ -277,6 +297,16 @@ class _stream_partitions:
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+
+
+def _await_then_drop_checkpoint(q, ckpt: str, owned: bool) -> None:
+    """Wait for an AvailableNow query to drain, then delete its
+    checkpoint directory if the caller did not supply it."""
+    try:
+        q.awaitTermination()
+    finally:
+        if owned:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_stream_to_table(
@@ -289,10 +319,11 @@ def run_stream_to_table(
     Trigger.AvailableNow into a memory sink (S5) and return the result
     as a batch DataFrame. Checkpoint directory (S9) gives the run the
     same offset/commit WAL a production query has; pass ``checkpoint``
-    to use a known location (e.g. for post-run state inspection).
+    to use a known location (e.g. for post-run state inspection) — a
+    checkpoint this function creates is deleted once the run ends.
     ``state_partitions`` overrides the tiny-state fixture profile for
-    operators whose state-group count is input-sized (the s19 rule) —
-    None keeps the measured 2-partition local default."""
+    operators whose state work is input-sized (``input_sized_partitions``)
+    — None keeps the measured 2-partition local default."""
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = checkpoint or tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
@@ -305,13 +336,14 @@ def run_stream_to_table(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await_then_drop_checkpoint(q, ckpt, checkpoint is None)
     return spark.table(name)
 
 
 def run_stream_to_parquet(stream_df: DataFrame, path: str | None = None) -> str:
     """S6 file sink: append-mode parquet delivery with checkpoint;
-    returns the output path."""
+    returns the output path (the checkpoint is deleted once the run
+    ends)."""
     path = path or tempfile.mkdtemp(prefix="sparkgraft_out_")
     ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
     q = (
@@ -322,7 +354,7 @@ def run_stream_to_parquet(stream_df: DataFrame, path: str | None = None) -> str:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    _await_then_drop_checkpoint(q, ckpt, True)
     return path
 
 
@@ -337,7 +369,7 @@ def run_stream_foreach_batch(stream_df: DataFrame, fn) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    _await_then_drop_checkpoint(q, ckpt, True)
 
 
 # --- Kafka connector builders (S1/S8 proper; need kafka jars on the cluster) --

@@ -9,6 +9,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -213,15 +214,18 @@ def _digest(pdf: pd.DataFrame) -> str:
 
 
 @pytest.mark.parametrize(
-    "name",
+    "name,parts",
     [
-        "s21_stream_ewma",
-        "t7_stateful_sessionize",
-        "t17_stream_attribution",
-        "t22_stream_heavy_hitters",
+        pytest.param("s21_stream_ewma", None, id="s21_stream_ewma"),
+        # the test scale sizes s21 to one state partition, which has a
+        # single shard label; three make the frozen labels matter
+        pytest.param("s21_stream_ewma", 3, id="s21_stream_ewma-3parts"),
+        pytest.param("t7_stateful_sessionize", None, id="t7_stateful_sessionize"),
+        pytest.param("t17_stream_attribution", None, id="t17_stream_attribution"),
+        pytest.param("t22_stream_heavy_hitters", None, id="t22_stream_heavy_hitters"),
     ],
 )
-def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name):
+def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name, parts):
     """The query over the first two replay chunks, then over all four
     from the same checkpoint (the s9_checkpoint_recovery pattern): the
     packed state the first run wrote must read back — under the shard
@@ -231,6 +235,8 @@ def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name)
     through foreachBatch."""
     from sparkstreaming_mq_spark.streaming import queries, sources
 
+    if parts is not None:
+        monkeypatch.setattr(queries, "input_sized_partitions", lambda *_: parts)
     fn = getattr(queries, name)
     whole = fn(spark, sf_dir).toPandas()
 
@@ -241,6 +247,7 @@ def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name)
     n_batches: list[int] = []
 
     def run_to_batches(df, mode, state_partitions=None):
+        assert parts in (None, state_partitions)
         batches = []
         with sources._stream_partitions(spark, state_partitions):
             (
@@ -265,3 +272,70 @@ def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name)
     assert n_batches == [2, 2]
     assert all(len(out) for out in outputs)
     assert _digest(pd.concat(outputs, ignore_index=True)) == _digest(whole)
+
+
+@pytest.mark.parametrize(
+    "events,per_partition,want",
+    [
+        (1_000, 25_000, 1),
+        (1_000, 12_500, 1),
+        (10_000, 25_000, 1),
+        (10_000, 12_500, 1),
+        (100_000, 25_000, 4),  # s21 at sf0.1
+        (100_000, 12_500, 8),  # s19 at sf0.1
+        (1_000_000, 25_000, 32),  # the 10x corpus
+        (1_000_000, 12_500, 32),
+    ],
+)
+def test_input_sized_partitions(monkeypatch, events, per_partition, want):
+    from sparkstreaming_mq_spark.streaming import sources
+
+    seen = []
+
+    def rowcount(sf_dir, name):
+        seen.append((sf_dir, name))
+        return events
+
+    monkeypatch.setattr(sources, "table_rowcount", rowcount)
+    assert sources.input_sized_partitions("fixture", per_partition) == want
+    assert seen == [("fixture", "events")]
+
+
+def _node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+def test_s21_runs_one_python_node(spark, sf_dir, monkeypatch):
+    """s21's stream has no Python stage before its stateful operator:
+    the hour and micro-unit columns are Catalyst expressions."""
+    from sparkstreaming_mq_spark.streaming import queries
+
+    captured = []
+    monkeypatch.setattr(
+        queries, "run_stream_to_table", lambda df, *a, **k: captured.append(df)
+    )
+    queries.s21_stream_ewma(spark, sf_dir)
+    (df,) = captured
+    names = _node_names(df._jdf.queryExecution().analyzed())
+    python = [n for n in names if any(w in n for w in ("Python", "Pandas", "Arrow"))]
+    assert python == ["FlatMapGroupsInPandasWithState"]
+    assert "MapInPandas" not in names
+
+
+def _checkpoint_dirs() -> set[str]:
+    tmp = tempfile.gettempdir()
+    return {n for n in os.listdir(tmp) if n.startswith("sparkgraft_ckpt_")}
+
+
+@pytest.mark.parametrize("name", ["s21_stream_ewma", "s2_rate_source", "t10_stream_progress"])
+def test_stream_runs_leave_no_checkpoint(spark, sf_dir, name):
+    """A stream run deletes the checkpoint it created."""
+    from sparkstreaming_mq_spark.streaming import queries
+
+    before = _checkpoint_dirs()
+    assert getattr(queries, name)(spark, sf_dir).count() > 0
+    assert _checkpoint_dirs() - before == set()
