@@ -30,7 +30,8 @@ BOTH the corpus and the attribution wrong:
 
 Usage: python scripts/l51_rung.py <dir> [--mode exact|banded]
        [--warm <dir>] [--runs N]
-Prints one JSON line: wall(s) per run, rows, keepers, spill.
+Prints one JSON line: wall(s) per run, rows, keepers, and the last
+run's ``spark_metrics.measure`` record (stage attribution, spill).
 """
 
 from __future__ import annotations
@@ -38,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from sparkstreaming_mq_spark import registry  # noqa: E402
 from sparkstreaming_mq_spark.operators import llm  # noqa: E402
 from sparkstreaming_mq_spark.session import get_spark  # noqa: E402
-from spark_metrics import diff_metrics, stage_metrics  # noqa: E402
+from spark_metrics import measure  # noqa: E402
 
 
 def main() -> int:
@@ -84,24 +84,26 @@ def main() -> int:
     fn = registry.QUERIES["l51_cluster_survivorship"]
     rec: dict = {"dir": sf_dir, "mode": mode}
     if warm_dir:
-        t0 = time.time()
-        fn(spark, warm_dir).count()
-        rec["warm_s"] = round(time.time() - t0, 2)
-    walls = []
-    for _ in range(runs):
-        before = stage_metrics(spark)
-        t0 = time.time()
-        out = fn(spark, sf_dir).agg(
-            F.count("*").alias("rows"), F.sum("keep").alias("keepers")
-        ).collect()[0]
-        walls.append(round(time.time() - t0, 2))
-        after = stage_metrics(spark)
+        rec["warm_s"] = measure(spark, lambda: fn(spark, warm_dir))["wall_s"]
+    counts = []
+
+    def l51_counts():
+        # the timed program is l51 plus one (rows, keepers) aggregate;
+        # measure counts the returned one-row frame
+        counts.append(
+            fn(spark, sf_dir)
+            .agg(F.count("*").alias("rows"), F.sum("keep").alias("keepers"))
+            .collect()[0]
+        )
+        return spark.createDataFrame(counts[-1:])
+
+    runs_rec = [measure(spark, l51_counts) for _ in range(runs)]
     rec.update(
         {
-            "walls_s": walls,
-            "rows": out["rows"],
-            "keepers": int(out["keepers"]),
-            "spill": diff_metrics(before, after),
+            "walls_s": [r["wall_s"] for r in runs_rec],
+            "rows": counts[-1]["rows"],
+            "keepers": int(counts[-1]["keepers"]),
+            "measure": runs_rec[-1],
         }
     )
     print(json.dumps(rec))

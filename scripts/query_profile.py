@@ -1,17 +1,22 @@
 #!/usr/bin/env python
-"""Generic per-query stage profiler (s19_profile.py generalized —
-VERDICT r13 item 3 wants the same attribution protocol for t20's
-two-round drift before bench3 crosses the 2x gate).
+"""Per-query stage profiler: one registered query, one fresh process.
 
-Runs warmup + N timed runs of ONE registered query in ONE fresh
-process (launch solo, never beside other Spark work); per run, diffs
-the Spark REST stage metrics and keeps each new stage's
-executorRunTime / executorCpuTime / spill / shuffle / in-out bytes.
-runTime >> cpuTime on a stage = waiting (I/O, python workers, store
-commits); runTime ~ cpuTime = compute.
+Runs one warmup + N timed runs of the query (launch solo, never beside
+other Spark work), each through ``spark_metrics.measure`` — so the
+timed program is the registered one, and every run records its wall,
+rows, executed-plan Python nodes and per-stage run/CPU/spill/shuffle
+attribution. The replay fixture the stream queries read (chunk file
+count and bytes) is pinned in the artifact.
+
+``--warm <dir>`` runs the warmup on another dir (the per-session
+protocol: a fresh session per measured dir, warmed on sf0.1 so JIT and
+Arrow-worker startup stay out of the timed runs). In-session
+sequential runs over several big dirs contaminate each other — l50's
+uniform-then-skew pair faked a 3.6x "skew ratio" that is 0.87x
+per-session (measurements/skew_l50_r11.json).
 
 Usage:
-  python scripts/query_profile.py <query> [sf_dir] [n_runs] [out.json]
+  python scripts/query_profile.py <query> [sf_dir] [n_runs] [out.json] [--warm <dir>]
 """
 
 from __future__ import annotations
@@ -20,54 +25,30 @@ import glob
 import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from sparkstreaming_mq_spark import registry  # noqa: E402
 from sparkstreaming_mq_spark.session import get_spark  # noqa: E402
 from sparkstreaming_mq_spark.streaming.sources import (  # noqa: E402
     chunked_events_dir,
 )
-
-
-def _stages_full(spark) -> dict:
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as resp:
-        stages = json.load(resp)
-    out = {}
-    for s in stages:
-        sid = f"{s['stageId']}.{s.get('attemptId', 0)}"
-        out[sid] = {
-            "name": s.get("name", "")[:90],
-            "tasks": s.get("numCompleteTasks", 0),
-            "run_ms": s.get("executorRunTime", 0),
-            "cpu_ms": round(s.get("executorCpuTime", 0) / 1e6, 1),
-            "mem_spill": s.get("memoryBytesSpilled", 0),
-            "disk_spill": s.get("diskBytesSpilled", 0),
-            "shuf_write": s.get("shuffleWriteBytes", 0),
-            "shuf_read": s.get("shuffleReadBytes", 0),
-            "out_bytes": s.get("outputBytes", 0),
-            "in_bytes": s.get("inputBytes", 0),
-        }
-    return out
+from spark_metrics import measure  # noqa: E402
 
 
 def main() -> None:
-    name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    args = sys.argv[1:]
+    warm_dir = None
+    if "--warm" in args:
+        i = args.index("--warm")
+        warm_dir = args[i + 1]
+        del args[i : i + 2]
+    name = args[0]
+    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
+    n_runs = int(args[2]) if len(args) > 2 else 3
     out_path = (
-        sys.argv[4]
-        if len(sys.argv) > 4
-        else os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "measurements",
-            f"{name}_profile.json",
-        )
+        args[3] if len(args) > 3 else os.path.join(REPO, "measurements", f"{name}_profile.json")
     )
     spark = get_spark(
         app_name=f"sparkgraft-profile-{name}",
@@ -90,32 +71,11 @@ def main() -> None:
     fn = registry.all_queries()[name]
     runs = []
     for i in range(n_runs + 1):  # first run = warmup (cache/JIT), kept labeled
-        before = _stages_full(spark)
-        t0 = time.time()
-        out = fn(spark, sf_dir)
-        n_rows = out.count()
-        wall = round(time.time() - t0, 3)
-        after = _stages_full(spark)
-        new = {sid: row for sid, row in after.items() if sid not in before}
-        top = sorted(new.values(), key=lambda r: r["run_ms"], reverse=True)
-        runs.append(
-            {
-                "warmup": i == 0,
-                "wall_s": wall,
-                "rows_out": n_rows,
-                "n_new_stages": len(new),
-                "sum_run_ms": sum(r["run_ms"] for r in new.values()),
-                "sum_cpu_ms": round(sum(r["cpu_ms"] for r in new.values()), 1),
-                "sum_mem_spill": sum(r["mem_spill"] for r in new.values()),
-                "sum_disk_spill": sum(r["disk_spill"] for r in new.values()),
-                "sum_shuf_write": sum(r["shuf_write"] for r in new.values()),
-                "sum_out_bytes": sum(r["out_bytes"] for r in new.values()),
-                "top_stages_by_run_ms": top[:8],
-            }
-        )
+        d = warm_dir if i == 0 and warm_dir else sf_dir
+        runs.append({"warmup": i == 0, "dir": d, **measure(spark, lambda: fn(spark, d))})
         print(
-            f"run {i} ({'warmup' if i == 0 else 'timed'}): {wall}s, "
-            f"{n_rows} rows",
+            f"run {i} ({'warmup' if i == 0 else 'timed'}): {runs[-1]['wall_s']}s, "
+            f"{runs[-1]['rows']} rows",
             file=sys.stderr,
         )
 

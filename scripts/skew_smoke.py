@@ -49,7 +49,7 @@ from sparkstreaming_mq_spark.session import get_spark
 from sparkstreaming_mq_spark.tables import load_table
 
 from scale_smoke import KEYSPAN, SRC, build as build_uniform
-from spark_metrics import diff_metrics, run_counted, skew_evidence, stage_metrics
+from spark_metrics import measure
 
 HOT_ORDERKEY = 1          # exists once in orders (copy 0)
 HOT_USER = 1              # a valid c_custkey
@@ -223,17 +223,7 @@ def main() -> int:
         fn = registry.QUERIES[name]
         row = {}
         for label, d in (("uniform", uni_dir), ("skew", skew_dir)):
-            before = stage_metrics(spark)
-            t0 = time.time()
-            n, plan = run_counted(fn(spark, d))
-            wall = round(time.time() - t0, 2)
-            after = stage_metrics(spark)
-            row[label] = {
-                "wall_s": wall,
-                "rows": n,
-                **skew_evidence(plan),
-                "spill": diff_metrics(before, after),
-            }
+            row[label] = measure(spark, lambda: fn(spark, d))
         row["skew_ratio"] = round(
             row["skew"]["wall_s"] / max(row["uniform"]["wall_s"], 1e-9), 2
         )
@@ -242,7 +232,7 @@ def main() -> int:
             f"{name:26s} uniform {row['uniform']['wall_s']:7.2f}s  "
             f"skew {row['skew']['wall_s']:7.2f}s  ({row['skew_ratio']:4.2f}x)  "
             f"skew_joins={row['skew']['skew_joins']}  "
-            f"spill={row['skew']['spill']['disk_spill'] + row['skew']['spill']['memory_spill']:,}"
+            f"spill={row['skew']['disk_spill'] + row['skew']['memory_spill']:,}"
         )
 
     # j1 demonstration pass: same skewed data, thresholds scaled down
@@ -250,22 +240,13 @@ def main() -> int:
     # and the hot-task sort spill must shrink/vanish.
     if not filters or any(f in "j1_inner_equi" for f in filters):
         with conf_override(spark, DEMO_CONF):
-            before = stage_metrics(spark)
-            t0 = time.time()
-            n, plan = run_counted(registry.QUERIES["j1_inner_equi"](spark, skew_dir))
-            wall = round(time.time() - t0, 2)
-            after = stage_metrics(spark)
-        results["j1_demo_thresholds"] = {
-            "wall_s": wall,
-            "rows": n,
-            **skew_evidence(plan),
-            "spill": diff_metrics(before, after),
-        }
-        r = results["j1_demo_thresholds"]
+            r = results["j1_demo_thresholds"] = measure(
+                spark, lambda: registry.QUERIES["j1_inner_equi"](spark, skew_dir)
+            )
         print(
-            f"j1 demo-thresholds         skew-dir {wall:7.2f}s  "
+            f"j1 demo-thresholds         skew-dir {r['wall_s']:7.2f}s  "
             f"skew_joins={r['skew_joins']}  "
-            f"spill={r['spill']['disk_spill'] + r['spill']['memory_spill']:,}"
+            f"spill={r['disk_spill'] + r['memory_spill']:,}"
         )
 
     # salted-vs-plain under the hot user key, with the customer
@@ -283,15 +264,8 @@ def main() -> int:
         )
         for label, q, conf in matrix:
             with conf_override(spark, conf):
-                t0 = time.time()
-                n, plan = run_counted(q(spark, skew_dir))
-                wall = round(time.time() - t0, 2)
-            results[f"j11_{label}"] = {
-                "wall_s": wall,
-                "rows": n,
-                **skew_evidence(plan),
-            }
-            print(f"j11 {label:22s} skew-dir {wall:7.2f}s  skew_joins={results[f'j11_{label}']['skew_joins']}")
+                r = results[f"j11_{label}"] = measure(spark, lambda: q(spark, skew_dir))
+            print(f"j11 {label:22s} skew-dir {r['wall_s']:7.2f}s  skew_joins={r['skew_joins']}")
 
     print(json.dumps(results))
     return 0

@@ -1,79 +1,73 @@
-"""Execution-metric helpers shared by the scale/skew smoke scripts.
+"""The one measured-run helper for the profiling scripts.
 
-Two probes, both against public Spark surfaces:
+Every script that times a query or attributes its stages goes through
+``measure(spark, make_df)``; this module is the only place that reads
+the Spark UI's REST status API (``/api/v1/applications/<id>/stages``).
 
-- ``stage_metrics(spark)``: sums per-stage shuffle-spill /
-  shuffle-write bytes from the Spark UI's REST status API
-  (``/api/v1/applications/<id>/stages``) — the measured answer to
-  "was that superlinear step spill or plan defect?" (VERDICT r9 item
-  2: the ds5 300× adjudication was inference; this makes it data).
+- ``stage_metrics(spark)``: one row per completed stage — tasks,
+  executorRunTime / executorCpuTime, spill, shuffle and in/out bytes.
+  runTime >> cpuTime on a stage = waiting (I/O, Python workers, store
+  commits); runTime ~ cpuTime = compute. Spill answers "was that
+  superlinear step spill or a plan defect?".
 - ``run_counted(df)``: executes a DataFrame through its OWN
-  QueryExecution (``qe.toRdd().count()``) so the post-run
-  ``executedPlan`` string carries AQE's final decisions — including
-  the ``skew=true`` markers on sort-merge joins that prove skew-join
-  splitting fired. (``df.count()`` would build a SEPARATE pruned
-  query; its executed plan is not the one we want to inspect, per
-  the CLAUDE.md count()-prunes lesson.)
+  QueryExecution (``qe.toRdd().count()``), so the program timed is the
+  program registered and the post-run ``executedPlan`` carries AQE's
+  final decisions (``skew=true`` on split sort-merge joins).
+  ``df.count()`` would build a SEPARATE pruned query — it drops the
+  Python node of a scalar/pandas UDF query, for one (the CLAUDE.md
+  count()-prunes lesson).
 """
 
 from __future__ import annotations
 
 import json
+import re
+import time
 import urllib.request
+
+TOTALS = (
+    "tasks", "run_ms", "cpu_ms", "memory_spill", "disk_spill",
+    "shuffle_write", "shuffle_read", "input_bytes", "output_bytes",
+)
 
 
 def stage_metrics(spark) -> dict:
-    """Totals of spill/shuffle bytes over all completed stages so far.
-
-    Returns {"memory_spill", "disk_spill", "shuffle_write",
-    "shuffle_read", "stages": {stageId: {...}} } — diff two snapshots
-    around a query to attribute bytes to it."""
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
+    """{"<stageId>.<attempt>": row} over all completed stages so far."""
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
     with urllib.request.urlopen(url, timeout=30) as resp:
         stages = json.load(resp)
-    out = {
-        "memory_spill": 0,
-        "disk_spill": 0,
-        "shuffle_write": 0,
-        "shuffle_read": 0,
-        "stages": {},
-    }
-    for s in stages:
-        sid = f"{s['stageId']}.{s.get('attemptId', 0)}"
-        row = {
+    return {
+        f"{s['stageId']}.{s.get('attemptId', 0)}": {
+            "name": s.get("name", "")[:90],
+            "tasks": s.get("numCompleteTasks", 0),
+            "run_ms": s.get("executorRunTime", 0),
+            "cpu_ms": round(s.get("executorCpuTime", 0) / 1e6, 1),
             "memory_spill": s.get("memoryBytesSpilled", 0),
             "disk_spill": s.get("diskBytesSpilled", 0),
             "shuffle_write": s.get("shuffleWriteBytes", 0),
             "shuffle_read": s.get("shuffleReadBytes", 0),
-            "name": s.get("name", "")[:80],
+            "input_bytes": s.get("inputBytes", 0),
+            "output_bytes": s.get("outputBytes", 0),
         }
-        out["stages"][sid] = row
-        for k in ("memory_spill", "disk_spill", "shuffle_write", "shuffle_read"):
-            out[k] += row[k]
-    return out
+        for s in stages
+    }
 
 
 def diff_metrics(before: dict, after: dict) -> dict:
-    """Per-query attribution: totals delta + the new stages' rows
-    (sorted by disk+memory spill, largest first)."""
-    new_stages = {
-        sid: row for sid, row in after["stages"].items() if sid not in before["stages"]
-    }
-    top = sorted(
-        new_stages.items(),
-        key=lambda kv: kv[1]["memory_spill"] + kv[1]["disk_spill"],
-        reverse=True,
-    )
-    return {
-        "memory_spill": after["memory_spill"] - before["memory_spill"],
-        "disk_spill": after["disk_spill"] - before["disk_spill"],
-        "shuffle_write": after["shuffle_write"] - before["shuffle_write"],
-        "top_spill_stages": [
-            {"stage": sid, **row} for sid, row in top[:5] if row["memory_spill"] + row["disk_spill"] > 0
-        ],
-    }
+    """Attribution of the stages that completed between two snapshots:
+    their totals, the top stages by run time and the spilling ones."""
+    new = {sid: row for sid, row in after.items() if sid not in before}
+    out = {"stages": len(new)}
+    for k in TOTALS:
+        out[k] = round(sum(row[k] for row in new.values()), 1)
+    rows = [{"stage": sid, **row} for sid, row in new.items()]
+    spill = lambda r: r["memory_spill"] + r["disk_spill"]  # noqa: E731
+    out["top_run_stages"] = sorted(rows, key=lambda r: r["run_ms"], reverse=True)[:8]
+    out["top_spill_stages"] = sorted(
+        (r for r in rows if spill(r) > 0), key=spill, reverse=True
+    )[:5]
+    return out
 
 
 def run_counted(df) -> tuple[int, str]:
@@ -81,13 +75,26 @@ def run_counted(df) -> tuple[int, str]:
     (row_count, executed-plan string with AQE final markers)."""
     qe = df._jdf.queryExecution()
     n = qe.toRdd().count()
-    plan = qe.executedPlan().toString()
-    return n, plan
+    return n, qe.executedPlan().toString()
 
 
-def skew_evidence(plan: str) -> dict:
-    """Count AQE skew markers in an executed-plan string."""
+def measure(spark, make_df) -> dict:
+    """Time ``run_counted(make_df())`` and attribute its stages.
+
+    ``make_df`` is a thunk so that work done while building the frame
+    is timed too: a stream query drains inside the query call and
+    returns its memory-sink table. Returns wall seconds, rows, the
+    executed plan's AQE skew markers and Python nodes, and the
+    ``diff_metrics`` of the stages the run completed."""
+    before = stage_metrics(spark)
+    t0 = time.time()
+    n, plan = run_counted(make_df())
+    wall = round(time.time() - t0, 3)
     return {
+        "wall_s": wall,
+        "rows": n,
         "skew_joins": plan.count("skew=true"),
         "aqe_final": "isFinalPlan=true" in plan,
+        "python_nodes": sorted(set(re.findall(r"\b\w*(?:Python|InPandas|InArrow)\w*", plan))),
+        **diff_metrics(before, stage_metrics(spark)),
     }

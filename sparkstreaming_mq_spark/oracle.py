@@ -56,7 +56,10 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     for t in TABLES:
         p = table_path(sf_dir, t)
         if os.path.exists(p):
-            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            # a Spark-written table (the scale and skew corpora) is a
+            # directory of part files, which read_parquet cannot open
+            src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     return con
 
 

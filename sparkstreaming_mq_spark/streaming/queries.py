@@ -881,12 +881,17 @@ def s9_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = sorted(
         n for n in __import__("os").listdir(chunks) if n.startswith("chunk_")
     )
-    for n in names[:2]:
-        shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
-    run_once()  # run 1: first two chunks
-    for n in names[2:]:
-        shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
-    run_once()  # run 2: same checkpoint — picks up only the new files
+    try:
+        for n in names[:2]:
+            shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
+        run_once()  # run 1: first two chunks
+        for n in names[2:]:
+            shutil.copytree(f"{chunks}/{n}", f"{live}/{n}")
+        run_once()  # run 2: same checkpoint — picks up only the new files
+    finally:
+        # the returned frame reads only the sink's output directory
+        shutil.rmtree(live, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out)
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in µs
@@ -1684,18 +1689,23 @@ def t13_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream computed: complete-mode counts per event type equal the
     batch GROUP BY. At 100 TB the reader scans state shards in
     parallel exactly like any other data source — state debugging
-    scales with the state, not the stream."""
+    scales with the state, not the stream. The state (one row per event
+    type) is collected before the checkpoint is deleted."""
+    import shutil
     import tempfile
 
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time")
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
     ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
-    run_stream_to_table(agg, "complete", checkpoint=ckpt)
-    state = spark.read.format("statestore").load(ckpt)
-    return state.select(
-        F.col("key.event_type").alias("event_type"),
-        F.col("value.count").alias("n_state"),
-    )
+    try:
+        run_stream_to_table(agg, "complete", checkpoint=ckpt)
+        state = spark.read.format("statestore").load(ckpt).select(
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").alias("n_state"),
+        )
+        return spark.createDataFrame(state.collect(), state.schema)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --- S8: MQ sink (custom Python DataSource writer) ----------------------------

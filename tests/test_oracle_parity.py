@@ -77,3 +77,19 @@ def test_compare_rejects_decimal_object_vs_float_dtype():
     c = pd.DataFrame({"k": pd.array([1, 2], dtype="int32")})
     d = pd.DataFrame({"k": pd.array([1, 2], dtype="int64")})
     assert compare(c, d) is None
+
+
+def test_oracle_views_read_part_file_directories(tmp_path):
+    """A Spark-written table is a directory of part files (the scale and
+    skew corpora); its view must count the rows of every part."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkstreaming_mq_spark.oracle import duckdb_connect
+
+    region = tmp_path / "region.parquet"
+    region.mkdir()
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), region / "part-00000.parquet")
+    pq.write_table(pa.table({"r_regionkey": [3, 4]}), region / "part-00001.parquet")
+    con = duckdb_connect(str(tmp_path))
+    assert con.execute("SELECT count(*) FROM region").fetchone()[0] == 5

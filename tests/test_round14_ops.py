@@ -1,13 +1,13 @@
 """Round-14 evidence tests.
 
-t22's lossy (past-CAP) regime now has a MEASURED artifact
-(measurements/t22_lossy_regime_r14.json, produced by
-scripts/t22_lossy_probe.py running the registered query unchanged
-with the CAP knob lowered on the real corpora). These tests pin the
-recorded run to the SpaceSaving contract so a regenerated artifact
-that violated the bound — or a probe edit that stopped checking it —
-fails loudly (VERDICT r13 item 5: "a pytest asserting the bound on
-the recorded run").
+t22's lossy (past-CAP) regime has a MEASURED artifact
+(measurements/t22_lossy_regime_r14.json, made by running the
+registered query unchanged with the CAP knob lowered on the real
+corpora; the probe script was frozen with its result and lives at
+commit f97d978 as scripts/t22_lossy_probe.py). These tests pin the
+recorded run to the SpaceSaving contract so an edited artifact that
+violated the bound fails loudly (VERDICT r13 item 5: "a pytest
+asserting the bound on the recorded run").
 """
 
 import json

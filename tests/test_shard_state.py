@@ -327,11 +327,20 @@ def test_s21_runs_one_python_node(spark, sf_dir, monkeypatch):
 
 
 def _checkpoint_dirs() -> set[str]:
-    tmp = tempfile.gettempdir()
-    return {n for n in os.listdir(tmp) if n.startswith("sparkgraft_ckpt_")}
+    prefixes = ("sparkgraft_ckpt_", "sparkgraft_live_", "sparkgraft_recov_ckpt_")
+    return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith(prefixes)}
 
 
-@pytest.mark.parametrize("name", ["s21_stream_ewma", "s2_rate_source", "t10_stream_progress"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s21_stream_ewma",
+        "s2_rate_source",
+        "t10_stream_progress",
+        "t13_state_inspect",
+        "s9_checkpoint_recovery",
+    ],
+)
 def test_stream_runs_leave_no_checkpoint(spark, sf_dir, name):
     """A stream run deletes the checkpoint it created."""
     from sparkstreaming_mq_spark.streaming import queries
