@@ -81,8 +81,6 @@ HEADLINES = {
     "w6_twophase_topk": "two Window exchanges; the second moves only the |groups|*salts*k bucket survivors",
     "j18_hybrid_skew_join": "hot keys take BroadcastHashJoin (never shuffle); cold remainder keeps the planner's join; one union aggregate",
     "j20_binned_range_join": "pure range predicate planned as a hash join on the time bin — NO BroadcastNestedLoopJoin/CartesianProduct",
-    "ds11_timeband_counts": "eight count(CASE) cells from ONE pushed-filter scan (canonical Q88 scans 8x)",
-    "ds12_cumulative_crossover": "ONE conditional-agg scan replaces both channel CTEs and the FULL OUTER join; windows on O(days) frames",
     "ds13_returns_impact": "returns LEFT-join collapsed to a CASE in the scan (1:1 self-derived); one exchange to the customer rollup + fused top-k",
     "ts4_downsample_paa": "16-byte bounds frame broadcast into the scan; one exchange of O(types x segments) rows",
     "l49_containment_pairs": "df-capped owner sets (hot shingles anti-joined out BEFORE collect_set); pair fanout <= cap^2 per shingle, denominators map-side",

@@ -140,17 +140,10 @@ QUERIES = [
     # key — on uniform replicas the 2× probe explode is the only cost
     # (t15 is the control; the skew-dir contrast is skew_smoke's job).
     "t19_bucketed_interval_join",
-    # ds11: one pushed-filter scan + single-row conditional agg — the
-    # flattest possible ladder shape; a superlinear step here would
-    # mean scan-layer trouble, nothing else.
-    "ds11_timeband_counts",
     # j20: pure range join via time-span binning — pair count is
     # density-bounded (events/hour grows ~3× on the stretched 10×
     # timeline), so the ratio tracks output pairs, not |A|·|B|.
     "j20_binned_range_join",
-    # ds12: one conditional-agg scan reduces to day grain before the
-    # running windows — O(days) frames after the first exchange.
-    "ds12_cumulative_crossover",
     # t20: per-batch CDC merge — since r11 delta-pruned (only touched
     # buckets rewrite), so the ladder tracks users (×5 at 10×) +
     # events, not epochs²; rewrite-BYTES evidence is cdc_rewrite_probe.
@@ -166,7 +159,7 @@ QUERIES = [
     # two fact-sized exchanges, should track rows.
     "ds13_returns_impact",
     # ts4 (r11): bounds pass + bucket pass, one O(types×W) exchange —
-    # flattest shape after ds11.
+    # flat shape.
     "ts4_downsample_paa",
     # l49 (r11): df-capped containment pairs — pair fanout ≤ cap² per
     # shingle; replicated corpora salt text per copy so cross-copy
@@ -181,8 +174,7 @@ QUERIES = [
     # w8 (r11): rank window + broadcast bounds on one exchange —
     # should track rows like w1.
     "w8_winsorized_mean",
-    # x6 (r11): one 2-column scan + 20-key conditional agg — ds11-class
-    # flat shape.
+    # x6 (r11): one 2-column scan + 20-key conditional agg — flat shape.
     "x6_distribution_drift",
     # l50 (r11): prefix-filtered similarity join. NOTE the copy-salt
     # only appends one token, so every cross-copy pair of the same

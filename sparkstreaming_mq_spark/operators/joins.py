@@ -69,71 +69,6 @@ def j1_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- J2: outer joins --------------------------------------------------------
-
-@query(
-    "j2_left_outer",
-    oracle="""
-SELECT
-  c.c_custkey,
-  count(o.o_orderkey)                      AS n_orders,
-  round(coalesce(sum(o.o_totalprice), 0), 2) AS total_spend
-FROM customer c
-LEFT JOIN orders o
-  ON c.c_custkey = o.o_custkey AND o.o_orderstatus = 'F'
-GROUP BY c.c_custkey
-""",
-)
-def j2_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join keeps customers with zero matching orders."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    cond = (cust.c_custkey == orders.o_custkey) & (orders.o_orderstatus == "F")
-    return (
-        cust.join(orders, cond, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("total_spend"),
-        )
-    )
-
-
-@query(
-    "j2_full_outer",
-    oracle="""
-WITH cust_nations AS (
-  SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer GROUP BY c_nationkey
-), supp_nations AS (
-  SELECT s_nationkey AS nk, count(*) AS n_supp FROM supplier GROUP BY s_nationkey
-)
-SELECT
-  coalesce(c.nk, s.nk) AS nationkey,
-  coalesce(c.n_cust, 0) AS n_cust,
-  coalesce(s.n_supp, 0) AS n_supp
-FROM cust_nations c
-FULL OUTER JOIN supp_nations s ON c.nk = s.nk
-""",
-)
-def j2_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join of per-nation customer vs supplier counts."""
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("cnk"))
-        .agg(F.count("*").alias("n_cust"))
-    )
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("snk"))
-        .agg(F.count("*").alias("n_supp"))
-    )
-    return cust.join(supp, cust.cnk == supp.snk, "full").select(
-        F.coalesce("cnk", "snk").alias("nationkey"),
-        F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-        F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-    )
-
-
 # --- J3: broadcast dimension join -------------------------------------------
 
 @query(
@@ -164,93 +99,6 @@ def j3_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_cust"),
             F.round(F.avg("c_acctbal"), 4).alias("avg_bal"),
         )
-    )
-
-
-# --- J4: cross join -----------------------------------------------------------
-
-@query(
-    "j4_cross",
-    oracle="""
-SELECT r.r_name, n.n_name
-FROM region r
-CROSS JOIN nation n
-""",
-)
-def j4_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cartesian product of two bounded dims (5 × 25)."""
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    return region.crossJoin(nation).select("r_name", "n_name")
-
-
-# --- J5: theta / range join -----------------------------------------------------
-
-@query(
-    "j5_theta_range",
-    oracle="""
-SELECT
-  o.o_orderpriority,
-  count(*) AS n_late_lines
-FROM lineitem l
-JOIN orders o
-  ON l.l_orderkey = o.o_orderkey
- AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-GROUP BY o.o_orderpriority
-""",
-)
-def j5_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi key + range residual: lines shipped >90 days after order.
-    The equi part keeps it a hash/sort-merge join (the range term is a
-    post-join residual filter, NOT a nested loop)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cond = (li.l_orderkey == orders.o_orderkey) & (
-        li.l_shipdate > F.date_add(orders.o_orderdate, 90)
-    )
-    return li.join(orders, cond).groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_late_lines")
-    )
-
-
-# --- J6/J7: semi and anti joins ----------------------------------------------
-
-@query(
-    "j6_left_semi",
-    oracle="""
-SELECT c_custkey, c_name
-FROM customer c
-WHERE EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000
-)
-""",
-)
-def j6_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS: customers having at least one big order."""
-    cust = load_table(spark, sf_dir, "customer")
-    big_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
-    return cust.join(
-        big_orders, cust.c_custkey == big_orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name")
-
-
-@query(
-    "j7_left_anti",
-    oracle="""
-SELECT c_custkey, c_mktsegment
-FROM customer c
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-)
-""",
-)
-def j7_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS: customers with no orders at all."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
-        "c_custkey", "c_mktsegment"
     )
 
 
@@ -668,38 +516,6 @@ def j13_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-# --- J14: correlated LATERAL join ---------------------------------------------
-
-J14_SQL = """
-SELECT o.o_orderkey, t.l_linenumber,
-       CAST(round(CAST(t.l_extendedprice AS DECIMAL(18,2)), 2) AS DOUBLE)
-         AS price
-FROM orders o, LATERAL (
-  SELECT l_linenumber, l_extendedprice FROM lineitem l
-  WHERE l.l_orderkey = o.o_orderkey
-  ORDER BY l_extendedprice DESC, l_linenumber
-  LIMIT 2
-) t
-WHERE o.o_totalprice > 400000
-"""
-
-
-@query("j14_lateral_topn", oracle=J14_SQL)
-def j14_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL join: for each qualifying order, the top-2
-    priciest lineitems — the per-row-subquery formulation users write
-    when a window feels unnatural. Spark decorrelates the lateral
-    subquery into a ranked join (DecorrelateInnerQuery), so the
-    executed plan is the same shuffle-once window shape as W4 rather
-    than a per-order nested loop — which is exactly why the construct
-    survives at 100 TB. Identical SQL text runs on both engines.
-    """
-    from sparkstreaming_mq_spark.tables import register_views
-
-    register_views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(J14_SQL)
 
 
 # --- J15: interval-overlap join via time-bucket decomposition -----------------

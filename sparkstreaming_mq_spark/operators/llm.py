@@ -45,8 +45,8 @@ from sparkstreaming_mq_spark.tables import load_table, table_rowcount
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "it")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
-# Marker tokens for the heuristic language-ID operator (l4e / l4_text_
-# metrics). Dict order is the tie-break priority.
+# Marker tokens for the heuristic language ID in l4_text_metrics. Dict
+# order is the tie-break priority.
 LANG_MARKERS = {
     "en": ("the", "is", "and", "of", "to"),
     "es": ("el", "la", "de", "que", "los"),
@@ -103,33 +103,6 @@ def l6_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- L4: text analysis -------------------------------------------------------
 
 @query(
-    "l4_text_stats",
-    oracle="""
-SELECT
-  lang,
-  count(*)                                          AS n_docs,
-  round(avg(n_chars), 4)                            AS avg_chars,
-  round(avg(len(string_split(text, ' '))), 4)       AS avg_tokens,
-  max(len(string_split(text, ' ')))                 AS max_tokens,
-  min(n_chars)                                      AS min_chars
-FROM documents
-GROUP BY lang
-""",
-)
-def l4_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level text statistics per language."""
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " "))
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        F.round(F.avg(n_tok), 4).alias("avg_tokens"),
-        F.max(n_tok).alias("max_tokens"),
-        F.min("n_chars").alias("min_chars"),
-    )
-
-
-@query(
     "l4b_quality_score",
     oracle=f"""
 SELECT
@@ -170,64 +143,10 @@ def l4b_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "l4c_token_count",
-    oracle="""
-SELECT
-  doc_id,
-  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpeish,
-  len(string_split(text, ' '))                              AS n_ws
-FROM documents
-""",
-)
-def l4c_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting two ways: whitespace split and a BPE-ish regex
-    (letter runs / digit runs / single punctuation)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        # idx=0 → whole-match extraction (the pattern has no capture group)
-        F.size(F.regexp_extract_all("text", F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0)).alias(
-            "n_bpeish"
-        ),
-        F.size(F.split("text", " ")).alias("n_ws"),
-    )
-
-
-@query(
-    "l4d_fingerprint",
-    oracle="""
-WITH fp AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-                                 ' +', ' ', 'g'))) AS fingerprint
-  FROM documents
-)
-SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS first_doc
-FROM fp
-GROUP BY fingerprint
-HAVING count(*) > 1
-""",
-)
-def l4d_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 over the L6-normalized text;
-    emit only colliding fingerprints (normalized duplicates)."""
-    d = load_table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " ")
-    )
-    return (
-        d.select("doc_id", F.md5(norm).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("first_doc"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # --- L4 combined text analysis (driver-slot query) ----------------------------
 
 def _langid_sql() -> str:
-    """DuckDB mirror of the l4e marker-argmax language heuristic."""
+    """DuckDB mirror of the marker-argmax language heuristic."""
     hits = {
         lang: (
             "len(list_filter(string_split(text, ' '), "
@@ -273,8 +192,7 @@ def l4_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (uniqueness/stopword ratios, keep flag), BPE-ish regex token
     count, normalized-text md5 fingerprint, and marker-argmax language
     ID — every column a JVM higher-order/regex/hash expression, zero
-    Python. Single-family variants (l4_text_stats/l4b/l4c/l4d/l4e)
-    stay registered past the scored window."""
+    Python."""
     d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tok = F.size(toks)
@@ -727,50 +645,6 @@ def _broadcast_jaccard_pairs(d: DataFrame, threshold: float) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jac"))
-    )
-
-
-# --- L4e: language identification (n-gram/marker heuristic) -------------------
-
-@query(
-    "l4e_langid",
-    oracle="SELECT doc_id, lang AS labeled_lang, "
-    + _langid_sql()
-    + " FROM documents",
-)
-def l4e_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic language ID: count per-language marker-token hits,
-    argmax with a fixed tie order, 'und' when nothing matches. All
-    JVM-side higher-order functions (no Python). Oracle: the same
-    ``_langid_sql`` mirror the scored l4_text_metrics slot uses;
-    pytest asserts determinism and the und/match split. (The synthetic
-    corpus is a shared bag-of-words vocabulary, so this exercises the
-    operator shape, not linguistic accuracy.)"""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-
-    def marker_pred(marks):
-        # closure, not a default arg: PySpark derives higher-order-
-        # function arity from the lambda's parameter count.
-        return lambda x: F.array_contains(marks, x)
-
-    hit_cols = []
-    for lang, markers in LANG_MARKERS.items():
-        marks = F.array(*[F.lit(m) for m in markers])
-        hit_cols.append(F.size(F.filter(toks, marker_pred(marks))).alias(f"hits_{lang}"))
-    scored = d.select("doc_id", "lang", *hit_cols)
-    best = F.greatest(*[F.col(f"hits_{lang}") for lang in LANG_MARKERS])
-    pred = F.lit("und")
-    # reversed so earlier languages win ties (when-chain first-match)
-    for lang in reversed(list(LANG_MARKERS)):
-        pred = F.when(
-            (F.col(f"hits_{lang}") == best) & (best > 0), F.lit(lang)
-        ).otherwise(pred)
-    return scored.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        pred.alias("pred_lang"),
-        best.alias("n_marker_hits"),
     )
 
 
@@ -2723,26 +2597,27 @@ def _kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_best(cents: dict[int, list[int]]):
-    """(cluster, dist) struct of the nearest centroid: one JVM
-    expression per centroid against broadcast literals, argmin via
-    array_min's struct ordering (d first, then cluster id for ties)."""
-    dist_structs = [
-        F.struct(
-            F.aggregate(
-                F.zip_with(
-                    "q",
-                    F.array(*[F.lit(int(v)) for v in vec]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("d"),
-            F.lit(int(c)).cast("long").alias("c"),
-        )
-        for c, vec in sorted(cents.items())
-    ]
-    return F.array_min(F.array(*dist_structs))
+def _kmeans_dist_structs(cents: dict[int, list[int]]):
+    """array<struct<d, c>> of exact squared distances from column ``q``
+    to every centroid: one JVM expression per centroid against
+    literals, in cluster-id order."""
+    return F.array(
+        *[
+            F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        "q",
+                        F.array(*[F.lit(int(v)) for v in vec]),
+                        lambda x, y: (x - y) * (x - y),
+                    ),
+                    F.lit(0).cast("long"),
+                    lambda a, x: a + x,
+                ).alias("d"),
+                F.lit(int(c)).cast("long").alias("c"),
+            )
+            for c, vec in sorted(cents.items())
+        ]
+    )
 
 
 def _centroid_row(qdf: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
@@ -2784,9 +2659,11 @@ def _kmeans_assign(qdf: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
     """(vec_id, q, c, d) nearest-centroid assignment with identical
     (d, c) tie-break on both paths:
 
-    - ≤ ANN_LITERAL_MAX_K centroids: ``_kmeans_best``'s expression
-      literals — one corpus scan, no join, no exchange (plan-pinned),
-      and at fixture K the interpreted lambda cost is noise.
+    - ≤ ANN_LITERAL_MAX_K centroids: ``_kmeans_dist_structs``'
+      expression literals, argmin via array_min's struct ordering (d
+      first, then cluster id) — one corpus scan, no join, no exchange
+      (plan-pinned), and at fixture K the interpreted lambda cost is
+      noise.
     - larger K (the √N regime past ANN_SMALL_N vectors): a vectorized
       Arrow ``mapInPandas`` kernel — N×K×dim dense distance work is
       exactly the case where Catalyst's higher-order-function lambdas
@@ -2798,7 +2675,7 @@ def _kmeans_assign(qdf: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
       path, pinned by test.
     """
     if len(cents) <= ANN_LITERAL_MAX_K:
-        best = _kmeans_best(cents)
+        best = F.array_min(_kmeans_dist_structs(cents))
         return qdf.select(
             "vec_id", "q", best["c"].alias("c"), best["d"].alias("d")
         )
@@ -2833,6 +2710,34 @@ def _kmeans_assign(qdf: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
     )
 
 
+def _train_kmeans(qdf: DataFrame, n_vecs: int) -> dict[int, list[int]]:
+    """Exact-integer Lloyd's: first-K-vec_ids init, then KMEANS_ITERS
+    rounds of assign + half-up integer recenter, all over the
+    deterministic training sample (whole corpus in the fixture
+    regime). With K ≈ √N, full-corpus training is N^1.5 per pass — the
+    sample caps it at (TRAIN_FACTOR·K)×K per pass. Returns the
+    centroids as cluster id -> quantized vector (K×dim driver ints)."""
+    k = ann_k(n_vecs, KMEANS_K)
+    qdf_t = qdf.filter(F.col("vec_id") < ann_train_n(n_vecs, k))
+    init = qdf.filter(F.col("vec_id") < k).collect()
+    cents = {int(r["vec_id"]): list(r["q"]) for r in init}
+    dim = len(next(iter(cents.values())))
+    for _ in range(KMEANS_ITERS):
+        sums = (
+            _kmeans_assign(qdf_t, cents)
+            .select("c", F.posexplode("q").alias("i", "x"))
+            .groupBy("c", "i")
+            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
+            .collect()
+        )
+        new_cents: dict[int, list[int]] = {}
+        for r in sums:
+            vec = new_cents.setdefault(int(r["c"]), [0] * dim)
+            vec[int(r["i"])] = math.floor((2 * r["s"] + r["n"]) / (2.0 * r["n"]))
+        cents = new_cents
+    return cents
+
+
 @query("l28_kmeans_embed", oracle=L28_ORACLE)
 def l28_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer Lloyd's k-means over the embedding corpus (K=
@@ -2848,33 +2753,9 @@ def l28_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     switches from expression literals to a broadcast-join argmin
     (``_kmeans_assign``)."""
     qdf = _kmeans_quantized(spark, sf_dir)
-    n_vecs = table_rowcount(sf_dir, "embeddings")
-    k = ann_k(n_vecs, KMEANS_K)
-    # Lloyd iterations run over the deterministic training sample
-    # (whole corpus in the fixture regime): with K ≈ √N, full-corpus
-    # training is N^1.5 per pass — the sample caps it at
-    # (TRAIN_FACTOR·K)×K per pass; only the single final assignment
-    # touches all N rows.
-    qdf_t = qdf.filter(F.col("vec_id") < ann_train_n(n_vecs, k))
-
-    # init: quantized embeddings of the first K vec_ids (K*dim ints)
-    init = qdf.filter(F.col("vec_id") < k).collect()
-    cents = {int(r["vec_id"]): list(r["q"]) for r in init}
-
-    for _ in range(KMEANS_ITERS):
-        asg = _kmeans_assign(qdf_t, cents)
-        sums = (
-            asg.select("c", F.posexplode("q").alias("i", "x"))
-            .groupBy("c", "i")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_cents: dict[int, list[int]] = {}
-        for r in sums:
-            vec = new_cents.setdefault(int(r["c"]), [0] * len(next(iter(cents.values()))))
-            vec[int(r["i"])] = math.floor((2 * r["s"] + r["n"]) / (2.0 * r["n"]))
-        cents = new_cents
-
+    # training runs on the sample; only the single final assignment
+    # touches all N rows
+    cents = _train_kmeans(qdf, table_rowcount(sf_dir, "embeddings"))
     return _kmeans_assign(qdf, cents).select(
         "vec_id", F.col("c").alias("cluster"), F.col("d").alias("dist")
     )
@@ -3339,28 +3220,13 @@ def _probe_cells(
     instead of literals — scan-local either way."""
     q = qdf.filter(F.col("vec_id") < n_queries)
     if len(cents) <= ANN_LITERAL_MAX_K:
-        dist_structs = F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            "q",
-                            F.array(*[F.lit(int(v)) for v in vec]),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda a, x: a + x,
-                    ).alias("d"),
-                    F.lit(int(c)).cast("long").alias("c"),
-                )
-                for c, vec in sorted(cents.items())
-            ]
-        )
         return (
             q.select(
                 F.col("vec_id").alias("query_id"),
                 F.col("q").alias("qq"),
-                F.explode(F.slice(F.array_sort(dist_structs), 1, nprobe)).alias("p"),
+                F.explode(
+                    F.slice(F.array_sort(_kmeans_dist_structs(cents)), 1, nprobe)
+                ).alias("p"),
             )
             .select("query_id", "qq", F.col("p.c").alias("c"))
         )
@@ -3453,28 +3319,9 @@ def l3d_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant).
     """
     qdf = _kmeans_quantized(spark, sf_dir)
-    n_vecs = table_rowcount(sf_dir, "embeddings")
-    k = ann_k(n_vecs, KMEANS_K)
-    # train on the deterministic sample (see l28) — only the inverted-
-    # file build and scoring touch the full corpus
-    qdf_t = qdf.filter(F.col("vec_id") < ann_train_n(n_vecs, k))
-    init = qdf.filter(F.col("vec_id") < k).collect()
-    cents = {int(r["vec_id"]): list(r["q"]) for r in init}
-    for _ in range(KMEANS_ITERS):
-        asg = _kmeans_assign(qdf_t, cents)
-        sums = (
-            asg.select("c", F.posexplode("q").alias("i", "x"))
-            .groupBy("c", "i")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_cents: dict[int, list[int]] = {}
-        dim = len(next(iter(cents.values())))
-        for r in sums:
-            vec = new_cents.setdefault(int(r["c"]), [0] * dim)
-            vec[int(r["i"])] = math.floor((2 * r["s"] + r["n"]) / (2.0 * r["n"]))
-        cents = new_cents
-
+    # train on the sample (as l28) — only the inverted-file build and
+    # scoring touch the full corpus
+    cents = _train_kmeans(qdf, table_rowcount(sf_dir, "embeddings"))
     inverted = _kmeans_assign(qdf, cents).select("vec_id", "q", "c")
     probes = _probe_cells(qdf, cents, L3D_IVF_QUERIES, L3D_IVF_NPROBE)
     scored = (

@@ -66,108 +66,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- P1: projection (select / compute / rename / cast) --------------------
-
-@query(
-    "p1_projection",
-    oracle="""
-SELECT
-  o_orderkey                                   AS order_key,
-  CAST(o_custkey AS INTEGER)                   AS cust_key_i32,
-  CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(3,1)), 2)
-       AS DOUBLE)                              AS gross_price,
-  upper(o_orderstatus)                         AS status_uc,
-  CAST(CAST(o_orderdate AS DATE) AS TIMESTAMP) AS order_date
-FROM orders
-""",
-)
-def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column select + compute + rename + cast; prunes the scan to 5 cols.
-
-    ``gross_price`` goes through exact decimal arithmetic on BOTH engines:
-    double `* 1.1` lands on .005 boundaries where Spark's and DuckDB's
-    float-round modes diverge (round-1 finding); decimal(18,2)×decimal(3,1)
-    is exact, both engines round decimals half-up, then the cast back to
-    double is value-preserving.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.select(
-        F.col("o_orderkey").alias("order_key"),
-        F.col("o_custkey").cast("int").alias("cust_key_i32"),
-        F.round(
-            F.col("o_totalprice").cast("decimal(18,2)") * F.lit("1.1").cast("decimal(3,1)"), 2
-        )
-        .cast("double")
-        .alias("gross_price"),
-        F.upper("o_orderstatus").alias("status_uc"),
-        # date-typed output hashes asymmetrically (datetime.date vs
-        # midnight Timestamp); round-trip through DATE→TIMESTAMP instead.
-        F.col("o_orderdate").cast("date").cast("timestamp").alias("order_date"),
-    )
-
-
-# --- P2: filter predicates -------------------------------------------------
-
-@query(
-    "p2_filter_predicates",
-    oracle="""
-SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice
-FROM orders
-WHERE o_orderstatus IN ('O', 'F')
-  AND o_totalprice BETWEEN 50000 AND 200000
-  AND o_orderpriority LIKE '%URGENT%'
-  AND o_orderdate IS NOT NULL
-  AND NOT (o_custkey % 10 = 3)
-""",
-)
-def p2_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunction of isin/between/like/null/negation predicates —
-    all pushable; parquet row-group min/max skips non-matching groups."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.filter(
-        F.col("o_orderstatus").isin("O", "F")
-        & F.col("o_totalprice").between(50000, 200000)
-        & F.col("o_orderpriority").like("%URGENT%")
-        & F.col("o_orderdate").isNotNull()
-        & ~(F.col("o_custkey") % 10 == 3)
-    ).select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
-
-
-# --- P3: conditional expressions -------------------------------------------
-
-@query(
-    "p3_conditional",
-    oracle="""
-SELECT
-  c_custkey,
-  CASE
-    WHEN c_acctbal < 0 THEN 'debt'
-    WHEN c_acctbal < 5000 THEN 'mid'
-    ELSE 'high'
-  END                                                   AS bal_band,
-  coalesce(nullif(c_mktsegment, 'MACHINERY'), 'OTHER')  AS segment_masked,
-  round(greatest(c_acctbal, 0.0), 2)                    AS bal_floor,
-  round(least(c_acctbal, 5000.0), 2)                    AS bal_cap
-FROM customer
-""",
-)
-def p3_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE WHEN / coalesce / nullif / greatest / least."""
-    cust = load_table(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "debt")
-        .when(F.col("c_acctbal") < 5000, "mid")
-        .otherwise("high")
-        .alias("bal_band"),
-        F.coalesce(F.nullif("c_mktsegment", F.lit("MACHINERY")), F.lit("OTHER")).alias(
-            "segment_masked"
-        ),
-        F.round(F.greatest("c_acctbal", F.lit(0.0)), 2).alias("bal_floor"),
-        F.round(F.least("c_acctbal", F.lit(5000.0)), 2).alias("bal_cap"),
-    )
-
-
 # --- P1+P2+P3 combined (driver-slot query): one ETL-shaped pass -------------
 
 @query(
@@ -200,8 +98,7 @@ def p1_project_filter_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     (isin/between/like/null/negation, all parquet-pushable) + P3
     conditionals (CASE/coalesce/nullif/greatest/least) in one
     ETL-shaped pass over orders — the driver-slot representative for
-    the whole projection/filter/conditional family (the single-family
-    variants p1/p2/p3 below stay registered past the scored window).
+    the whole projection/filter/conditional family.
     ``gross_price`` goes through exact decimal arithmetic on both
     engines (double *1.1 lands on .005 round boundaries)."""
     orders = load_table(spark, sf_dir, "orders")

@@ -32,51 +32,6 @@ from sparkstreaming_mq_spark.registry import query
 from sparkstreaming_mq_spark.tables import load_table
 
 
-# --- F1: string functions ---------------------------------------------------
-
-@query(
-    "f1_string",
-    oracle="""
-SELECT
-  c_custkey,
-  upper(c_mktsegment)                                   AS seg_uc,
-  lower(c_name)                                         AS name_lc,
-  substring(c_name, 1, 8)                               AS name_head,
-  length(c_name)                                        AS name_len,
-  concat_ws('-', c_mktsegment, CAST(c_custkey AS VARCHAR)) AS seg_key,
-  replace(c_name, 'Customer#', 'C')                     AS name_short,
-  lpad(CAST(c_custkey AS VARCHAR), 10, '0')             AS key_padded,
-  trim(concat(' ', c_mktsegment, ' '))                  AS seg_trimmed,
-  instr(c_name, '#')                                    AS hash_pos,
-  regexp_extract(c_name, '([0-9]+)', 1)                 AS key_digits,
-  regexp_replace(c_name, '[0-9]', 'x', 'g')             AS name_masked,
-  translate(c_mktsegment, 'AEIOU', 'aeiou')             AS seg_volc
-FROM customer
-""",
-)
-def f1_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String family: case, substring, pad, concat, replace, regex,
-    translate — all codegen'd JVM expressions."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.upper("c_mktsegment").alias("seg_uc"),
-        F.lower("c_name").alias("name_lc"),
-        F.substring("c_name", 1, 8).alias("name_head"),
-        F.length("c_name").alias("name_len"),
-        F.concat_ws("-", F.col("c_mktsegment"), F.col("c_custkey").cast("string")).alias(
-            "seg_key"
-        ),
-        F.replace(F.col("c_name"), F.lit("Customer#"), F.lit("C")).alias("name_short"),
-        F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("key_padded"),
-        F.trim(F.concat(F.lit(" "), F.col("c_mktsegment"), F.lit(" "))).alias("seg_trimmed"),
-        F.instr(F.col("c_name"), "#").alias("hash_pos"),
-        F.regexp_extract("c_name", "([0-9]+)", 1).alias("key_digits"),
-        F.regexp_replace("c_name", "[0-9]", "x").alias("name_masked"),
-        F.translate("c_mktsegment", "AEIOU", "aeiou").alias("seg_volc"),
-    )
-
-
 # --- F1+F7 combined (driver-slot query) --------------------------------------
 
 @query(
@@ -104,7 +59,7 @@ def f1_string_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family (F1: case/substring/pad/concat/replace/regex/
     translate) plus the portable hash family (F7: md5 + sha2-256 hex)
     in one driver-slot projection — every column a codegen'd JVM
-    expression, scan pruned to two input columns. Spark-specific
+    expression, scan pruned to three input columns. Spark-specific
     hashes (xxhash64/crc32) are exercised by the MinHash/fingerprint
     operators in operators/llm.py."""
     c = load_table(spark, sf_dir, "customer")
@@ -156,8 +111,9 @@ def f2_datetime_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time family (F2: extract/trunc/interval/diff/format) plus
     math family (F3: abs/ceil/floor/sqrt/logs/sign/mod) in one
     driver-slot projection over orders — all codegen'd JVM
-    expressions; trig and epoch variants stay in the standalone
-    f2/f3 queries registered past the scored window."""
+    expressions; trig and power functions stay in the standalone
+    f3_math, and epoch seconds (unix_timestamp) recur in the
+    event-analytics queries."""
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -177,43 +133,6 @@ def f2_datetime_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.log10("o_totalprice"), 6).alias("price_log10"),
         F.signum(F.col("o_totalprice") - 100000).cast("long").alias("price_sign"),
         (F.col("o_orderkey") % 7).alias("key_mod7"),
-    )
-
-
-# --- F2: date/time functions ------------------------------------------------
-
-@query(
-    "f2_datetime",
-    oracle="""
-SELECT
-  o_orderkey,
-  year(o_orderdate)                                  AS yr,
-  month(o_orderdate)                                 AS mo,
-  day(o_orderdate)                                   AS dom,
-  date_trunc('month', o_orderdate)                   AS month_start,
-  o_orderdate + INTERVAL 30 DAY                      AS due_ts,
-  date_diff('day', o_orderdate, TIMESTAMP '2002-01-01 00:00:00') AS days_left,
-  CAST(epoch(o_orderdate) AS BIGINT)                 AS epoch_s,
-  strftime(o_orderdate, '%Y-%m')                     AS ym_label
-FROM orders
-""",
-)
-def f2_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/time family: extract, truncate, interval arithmetic,
-    day-diff, epoch seconds, formatting."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").cast("long").alias("yr"),
-        F.month("o_orderdate").cast("long").alias("mo"),
-        F.dayofmonth("o_orderdate").cast("long").alias("dom"),
-        F.date_trunc("month", "o_orderdate").alias("month_start"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")).alias("due_ts"),
-        F.datediff(F.lit("2002-01-01").cast("timestamp"), F.col("o_orderdate"))
-        .cast("long")
-        .alias("days_left"),
-        F.unix_timestamp("o_orderdate").alias("epoch_s"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("ym_label"),
     )
 
 
@@ -485,32 +404,6 @@ def f8b_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.explode_outer(long_toks).alias("long_tok"))
 
 
-# --- F7: hash functions ------------------------------------------------------
-
-@query(
-    "f7_hash",
-    oracle="""
-SELECT
-  doc_id,
-  md5(text)            AS h_md5,
-  sha256(text)         AS h_sha256,
-  length(sha256(text)) AS sha_len
-FROM documents
-""",
-)
-def f7_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash family: md5 + sha2-256 (hex, engine-portable). xxhash64 /
-    crc32 / hash are Spark-specific (no DuckDB twin) and are exercised
-    by the MinHash/fingerprint operators in operators/llm.py."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.md5("text").alias("h_md5"),
-        F.sha2("text", 256).alias("h_sha256"),
-        F.length(F.sha2("text", 256)).alias("sha_len"),
-    )
-
-
 # --- F8: VariantType semi-structured payloads (Spark 4) -----------------------
 
 @query(
@@ -709,45 +602,6 @@ def f11_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lev_dist") <= F11_MAX_LEV)
         .select("name_a", "name_b", "lev_dist", "n_parts_a", "n_parts_b")
     )
-
-
-# --- F12: SQL pipe syntax (Spark 4.0 |> operators) ----------------------------
-
-F12_SPARK_SQL = """
-FROM lineitem
-|> WHERE l_quantity >= 30
-|> EXTEND CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_cents
-|> AGGREGATE count(*) AS n, sum(price_cents) AS sum_cents
-   GROUP BY l_returnflag, l_linestatus
-|> SELECT l_returnflag, l_linestatus, n, sum_cents
-"""
-
-
-@query(
-    "f12_pipe_syntax",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-         AS sum_cents
-FROM lineitem
-WHERE l_quantity >= 30
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def f12_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL pipe syntax (Spark 4.0, SIGMOD'24 "SQL Has Problems" /
-    GoogleSQL pipe operators): the same filter → extend → aggregate →
-    project pricing rollup as a linear `|>` chain — entry point B
-    (SURVEY §3.2) in its modern form. Catalyst compiles pipe stages to
-    the IDENTICAL logical plan as nested SQL, so pushdown/pruning and
-    the whole-stage-codegen aggregate are unchanged — which is exactly
-    what the oracle (written in classic SQL) proves. Money math stays
-    in fixed-point cents per the parity rules."""
-    from sparkstreaming_mq_spark.tables import register_views
-
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(F12_SPARK_SQL)
 
 
 # --- F13: SQL scripting (Spark 4 BEGIN/END procedural blocks) ------------------

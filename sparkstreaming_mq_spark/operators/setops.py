@@ -34,9 +34,7 @@ def o1_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative for O1 (global sort) / O3 (limit) / O4 (top-k):
     ORDER BY + LIMIT fuses into TakeOrderedAndProject (per-partition
     heap, driver merges k·p rows — never a full global sort at scale);
-    the unlimited global-sort plan is asserted in tests/test_plans.py
-    and the standalone o3/o4 variants stay registered past the scored
-    window."""
+    the fused plan is asserted in tests/test_plans.py."""
     o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
@@ -65,159 +63,6 @@ def o2_sort_within_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price"))
         .sortWithinPartitions("l_orderkey", "l_linenumber")
     )
-
-
-# --- O3: limit ---------------------------------------------------------------
-
-@query(
-    "o3_limit",
-    oracle="""
-SELECT DISTINCT o_orderstatus FROM orders ORDER BY o_orderstatus LIMIT 2
-""",
-)
-def o3_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIMIT over a deterministically ordered distinct set."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select("o_orderstatus").distinct().orderBy("o_orderstatus").limit(2)
-
-
-# --- O4: top-k (ORDER BY + LIMIT fusion) --------------------------------------
-
-@query(
-    "o4_topk",
-    oracle="""
-SELECT l_orderkey, l_linenumber, round(l_extendedprice, 2) AS price
-FROM lineitem
-ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-LIMIT 20
-""",
-)
-def o4_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 lineitems by price → TakeOrderedAndProject (per-partition
-    heap of 20, not a global sort)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.orderBy(F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber")
-        .select("l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price"))
-        .limit(20)
-    )
-
-
-# --- O5/O6: union all / union distinct ----------------------------------------
-
-@query(
-    "o5_union_all",
-    oracle="""
-SELECT o_custkey AS custkey, round(o_totalprice, 2) AS amount, 'order' AS src
-FROM orders WHERE o_orderstatus = 'F'
-UNION ALL
-SELECT c_custkey AS custkey, round(c_acctbal, 2) AS amount, 'balance' AS src
-FROM customer WHERE c_acctbal > 0
-""",
-)
-def o5_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag concatenation of two differently-sourced relations."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    a = o.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey"),
-        F.round("o_totalprice", 2).alias("amount"),
-        F.lit("order").alias("src"),
-    )
-    b = c.filter(F.col("c_acctbal") > 0).select(
-        F.col("c_custkey").alias("custkey"),
-        F.round("c_acctbal", 2).alias("amount"),
-        F.lit("balance").alias("src"),
-    )
-    return a.unionByName(b)
-
-
-@query(
-    "o6_union_distinct",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 250000
-UNION
-SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9000
-""",
-)
-def o6_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set union (dedup across both inputs)."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    a = o.filter(F.col("o_totalprice") > 250000).select(F.col("o_custkey").alias("custkey"))
-    b = c.filter(F.col("c_acctbal") > 9000).select(F.col("c_custkey").alias("custkey"))
-    return a.union(b).distinct()
-
-
-# --- O7: intersect / intersect all --------------------------------------------
-
-@query(
-    "o7_intersect",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-INTERSECT
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-""",
-)
-def o7_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set intersection: customers with both F and O orders."""
-    o = load_table(spark, sf_dir, "orders")
-    f = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    op = o.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
-    return f.intersect(op)
-
-
-@query(
-    "o7b_intersect_all",
-    oracle="""
-SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
-INTERSECT ALL
-SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'O'
-""",
-)
-def o7b_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag intersection (multiplicity = min of the two sides)."""
-    o = load_table(spark, sf_dir, "orders")
-    f = o.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
-    op = o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
-    return f.intersectAll(op)
-
-
-# --- O8: except / except all ---------------------------------------------------
-
-@query(
-    "o8_except",
-    oracle="""
-SELECT c_custkey AS custkey FROM customer
-EXCEPT
-SELECT o_custkey AS custkey FROM orders
-""",
-)
-def o8_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set difference: customers who never ordered."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.select(F.col("c_custkey").alias("custkey"))
-        .subtract(o.select(F.col("o_custkey").alias("custkey")))
-    )
-
-
-@query(
-    "o8b_except_all",
-    oracle="""
-SELECT o_custkey AS custkey FROM orders
-EXCEPT ALL
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-""",
-)
-def o8b_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag difference (multiplicity subtraction): per-customer order
-    count minus their F-status count."""
-    o = load_table(spark, sf_dir, "orders")
-    all_keys = o.select(F.col("o_custkey").alias("custkey"))
-    f_keys = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    return all_keys.exceptAll(f_keys)
 
 
 # --- O5-O8 combined set operations (driver-slot query) --------------------------

@@ -1760,152 +1760,6 @@ def ds10_moving_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DS11: TPC-DS Q88 shape — N time-band counts fused into one scan.
-# ---------------------------------------------------------------------------
-
-DS11_BANDS = [(8, 10), (10, 12), (12, 14), (14, 16), (16, 18), (18, 20), (20, 22), (22, 24)]
-DS11_MIN_VALUE = 50.0
-
-DS11_ORACLE = f"""
-SELECT
-{','.join(
-    f'''  CAST(count(CASE WHEN extract(hour FROM ts) >= {lo}
-       AND extract(hour FROM ts) < {hi} THEN 1 END) AS BIGINT) AS h{lo}_{hi}'''
-    for lo, hi in DS11_BANDS
-)}
-FROM events
-WHERE event_type = 'purchase' AND value >= {DS11_MIN_VALUE}
-"""
-
-
-@query("ds11_timeband_counts", oracle=DS11_ORACLE)
-def ds11_timeband_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-Q88 shape: customer activity counted in 8 disjoint
-    time-of-day bands. Q88's canonical form is EIGHT scalar
-    subqueries, each a full fact scan filtered to one band, glued by
-    a cross join — on 100 TB that's eight scans of store_sales.
-
-    Spark-first fusion: the bands become ONE conditional-aggregation
-    pass — a single pushed-predicate scan (event_type + value reach
-    the parquet reader as PushedFilters), eight `count(CASE WHEN
-    band)` columns computed in the same whole-stage-codegen loop, one
-    single-row global aggregate, ZERO joins and ZERO repeated I/O.
-    The per-band conditions are disjoint hour ranges, so each input
-    row increments at most one counter; Catalyst evaluates all eight
-    in one pass over the scan — the shape generalizes to any
-    "N subquery scans of the same fact" report. The oracle is the
-    same fused form in ANSI SQL (DuckDB executes the CASE-fused scan
-    directly), so correctness covers both the filter and every band
-    boundary (hours are half-open [lo, hi))."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        (F.col("event_type") == "purchase") & (F.col("value") >= DS11_MIN_VALUE)
-    )
-    hour = F.hour("ts")
-    aggs = [
-        F.count(F.when((hour >= lo) & (hour < hi), F.lit(1)))
-        .cast("long")
-        .alias(f"h{lo}_{hi}")
-        for lo, hi in DS11_BANDS
-    ]
-    return ev.agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# DS12: TPC-DS Q51 shape — cumulative channel crossover.
-# ---------------------------------------------------------------------------
-
-DS12_TOPK = 30
-
-DS12_ORACLE = f"""
-WITH clicks AS (
-  SELECT date_trunc('day', ts) AS d,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c_cents
-  FROM events WHERE event_type = 'click' GROUP BY d
-),
-purchases AS (
-  SELECT date_trunc('day', ts) AS d,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS p_cents
-  FROM events WHERE event_type = 'purchase' GROUP BY d
-),
-merged AS (
-  SELECT coalesce(c.d, p.d) AS d,
-         coalesce(c.c_cents, 0) AS c_cents,
-         coalesce(p.p_cents, 0) AS p_cents
-  FROM clicks c FULL OUTER JOIN purchases p ON c.d = p.d
-),
-cum AS (
-  SELECT d,
-         CAST(sum(c_cents) OVER (ORDER BY d
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_click,
-         CAST(sum(p_cents) OVER (ORDER BY d
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_purch
-  FROM merged
-)
-SELECT CAST(d AS TIMESTAMP) AS day_start, cum_click, cum_purch,
-       cum_purch - cum_click AS lead_cents
-FROM cum
-WHERE cum_purch > cum_click
-ORDER BY lead_cents DESC, day_start
-LIMIT {DS12_TOPK}
-"""
-
-
-@query("ds12_cumulative_crossover", oracle=DS12_ORACLE)
-def ds12_cumulative_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS-Q51 shape: two channels aggregated to a common grain,
-    FULL OUTER joined on it, running totals compared — "days where
-    cumulative purchase revenue leads cumulative click value, ranked
-    by the lead". Q51 does web vs store sales per item; here the
-    channels are event types over the shared day grain.
-
-    Scale: each channel reduces map-side to AT MOST one row per day
-    BEFORE any join — the full-outer join and both running windows
-    operate on day-grain frames (O(days), thousands of rows at any
-    corpus size), so the only fact-sized work is two pushed-filter
-    scans fused... actually ONE scan: both channel aggregates come
-    from a single conditional-aggregation pass (ds11's trick applied
-    to Q51), so lineitem-style double-scanning never happens. The
-    full-outer join of Q51 degenerates to the conditional aggregate's
-    day rows (a day missing one channel holds a zero) — same
-    semantics, zero join; the oracle keeps the canonical
-    two-CTE + FULL OUTER form, proving the fusion equivalent.
-    Exact-cent fixed point; the unbounded windows order by the day
-    key alone (unique per row, so the frame is total-order stable).
-    """
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        ev.groupBy(F.date_trunc("day", "ts").alias("day_start"))
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", cents).otherwise(0))
-            .cast("long")
-            .alias("c_cents"),
-            F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
-            .cast("long")
-            .alias("p_cents"),
-        )
-    )
-    w = Window.orderBy("day_start").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = daily.select(
-        "day_start",
-        F.sum("c_cents").over(w).cast("long").alias("cum_click"),
-        F.sum("p_cents").over(w).cast("long").alias("cum_purch"),
-    )
-    return (
-        cum.filter(F.col("cum_purch") > F.col("cum_click"))
-        .select(
-            "day_start",
-            "cum_click",
-            "cum_purch",
-            (F.col("cum_purch") - F.col("cum_click")).cast("long").alias("lead_cents"),
-        )
-        .orderBy(F.desc("lead_cents"), "day_start")
-        .limit(DS12_TOPK)
-    )
-
-# ---------------------------------------------------------------------------
 # DS13: TPC-DS Q93 shape — returns-adjusted revenue per customer.
 # ---------------------------------------------------------------------------
 

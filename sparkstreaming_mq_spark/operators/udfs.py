@@ -30,28 +30,6 @@ from sparkstreaming_mq_spark.registry import query
 from sparkstreaming_mq_spark.tables import load_table
 
 
-# --- U1: scalar (row-at-a-time) Python UDF -----------------------------------
-
-@query(
-    "u1_scalar_udf",
-    oracle="""
-SELECT c_custkey,
-       concat(upper(c_mktsegment), ':', CAST(length(c_name) AS VARCHAR)) AS tag
-FROM customer
-""",
-)
-def u1_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic scalar UDF (Arrow-optimized in 4.x): per-row string
-    tagging. The same logic in SQL is the oracle."""
-
-    @udf(returnType=StringType())
-    def tag(seg: str, name: str) -> str:
-        return f"{seg.upper()}:{len(name)}"
-
-    c = load_table(spark, sf_dir, "customer")
-    return c.select("c_custkey", tag("c_mktsegment", "c_name").alias("tag"))
-
-
 # --- U2: vectorized (pandas) scalar UDF --------------------------------------
 
 @query(

@@ -149,55 +149,6 @@ def w1_rank_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- W3: framed running aggregates -------------------------------------------
-
-@query(
-    "w3_frames",
-    oracle="""
-SELECT
-  o_custkey,
-  o_orderkey,
-  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS running_spend,
-  CAST(round(avg(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 3) AS DOUBLE)         AS ma3,
-  count(*) OVER (
-    PARTITION BY o_custkey ORDER BY o_totalprice
-    RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW)         AS n_within_10k
-FROM orders
-""",
-)
-def w3_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row frames (running sum, 3-row moving average) and a numeric
-    RANGE frame. Range frames include whole tie-groups, so they're
-    deterministic without a tiebreak; row frames carry one. The framed
-    sums/avgs go through exact decimal — windowed float sums accumulate
-    in engine-specific order (DuckDB uses a segment tree) and flap
-    .005-boundary rounding otherwise."""
-    o = load_table(spark, sf_dir, "orders")
-    seq = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    running = seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ma3 = seq.rowsBetween(-2, Window.currentRow)
-    band = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_totalprice")
-        .rangeBetween(-10000, Window.currentRow)
-    )
-    price_dec = F.col("o_totalprice").cast("decimal(18,2)")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.sum(price_dec).over(running), 2).cast("double").alias("running_spend"),
-        # round to 3, not 2: a 2-row frame averages an odd-cent sum to
-        # exactly x.xx5, where double-vs-decimal half-up diverges; no
-        # 1-3 row average of 2-decimal inputs has a 4th-decimal halfway.
-        F.round(F.avg(price_dec).over(ma3), 3).cast("double").alias("ma3"),
-        F.count("*").over(band).alias("n_within_10k"),
-    )
-
-
 # --- W3+W4 combined (driver-slot query) ---------------------------------------
 
 @query(

@@ -221,7 +221,6 @@ TAIL_PRIORITY: tuple[str, ...] = (
     "l5b_media_features",
     "l5c_frame_sample",
     "l5d_media_resize",
-    "l4e_langid",
     "s6_stream_file_sink",
     "t5b_stream_dedup_watermarked",  # bounded-state dedup (T5 scale form)
     "t11_rocksdb_state",        # RocksDB state backend (100 TB state path)
@@ -235,7 +234,6 @@ TAIL_PRIORITY: tuple[str, ...] = (
     "f8_variant",               # Spark 4 VariantType payload ETL
     "f11_fuzzy_match",          # blocked levenshtein entity resolution (r4)
     "a8b_unpivot",              # unpivot/melt (inverse of pivot)
-    "j14_lateral_topn",         # correlated LATERAL join (decorrelated)
     "a4b_sketch_merge",         # re-aggregatable HLL distinct rollup
     "a12_bitmap_distinct",      # EXACT re-aggregatable distinct via bitmaps (r4)
     "a13_time_weighted_avg",    # hold-until-next TWA, integer-exact (r4)
@@ -249,7 +247,6 @@ TAIL_PRIORITY: tuple[str, ...] = (
     "u8_pandas_iter_udf",       # SCALAR_ITER pandas UDF: amortized init (r4)
     "t4b_session_dynamic_gap",  # per-row session gap
     "t2_stream_tumbling",
-    "t3_stream_sliding",
     "f4b_json_roundtrip",
     "f5b_explode",
     "l38_dup_density",          # substring-duplication density (r7)
@@ -261,7 +258,6 @@ TAIL_PRIORITY: tuple[str, ...] = (
     "x4_table_fingerprint",     # bucketed XOR content fingerprint (r7)
     "l42_novelty_attribution",  # marginal-novelty ownership (r7)
     "s17_stream_fingerprint",   # streaming ingest-integrity fingerprint (r7)
-    "f12_pipe_syntax",          # Spark 4 SQL pipe-operator entry point (r7)
     "u6b_udtf_arrow",           # Arrow-optimized Python UDTF (r7)
     "q04_order_priority",       # TPC-H Q4 shape: EXISTS semi-join (r7)
     "q06_forecast_revenue",     # TPC-H Q6 shape: pure filter+agg (r7)

@@ -32,6 +32,7 @@ from sparkstreaming_mq_spark.streaming.sources import (
     read_events_stream_chunked,
     run_stream_foreach_batch,
     run_stream_to_parquet,
+    run_output_dir,
     run_stream_to_table,
 )
 from sparkstreaming_mq_spark.streaming.shard_state import (
@@ -104,31 +105,6 @@ def t2_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("window.start").alias("win_start"), "event_type", "n", "total_cents"
     )
-
-
-# --- T3: sliding window aggregation ------------------------------------------
-
-@query(
-    "t3_stream_sliding",
-    oracle="""
-SELECT ws AS win_start, event_type, count(*) AS n
-FROM (
-  SELECT event_type,
-         unnest([date_trunc('hour', ts), date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS ws
-  FROM events
-)
-GROUP BY ws, event_type
-""",
-)
-def t3_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (2h size, 1h slide): every event lands in two
-    overlapping windows; complete mode, equals the batch expansion."""
-    stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time")
-    agg = stream.groupBy(F.window("ts", "2 hours", "1 hour"), "event_type").agg(
-        F.count("*").alias("n")
-    )
-    out = run_stream_to_table(agg, "complete")
-    return out.select(F.col("window.start").alias("win_start"), "event_type", "n")
 
 
 # --- T2+T3 combined (driver-slot query) ---------------------------------------
@@ -531,12 +507,11 @@ def s7_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended to an 'upsert log' (parquet keyed by epoch — the pattern a
     JDBC/Redis writer follows, idempotent on retry by epoch id), then
     the log is compacted exactly-once per event and aggregated."""
-    import tempfile
 
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "event_id", "event_type", "value"
     )
-    store = tempfile.mkdtemp(prefix="sparkgraft_kv_")
+    store = run_output_dir("sparkgraft_kv_")
 
     def deliver(batch_df: DataFrame, epoch_id: int) -> None:
         (
@@ -857,7 +832,7 @@ def s9_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     chunks = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
     live = _tf.mkdtemp(prefix="sparkgraft_live_")
-    out = _tf.mkdtemp(prefix="sparkgraft_recov_out_")
+    out = run_output_dir("sparkgraft_recov_out_")
     ckpt = _tf.mkdtemp(prefix="sparkgraft_recov_ckpt_")
 
     def run_once() -> None:
@@ -1246,7 +1221,6 @@ def s10_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the snapshot is small enough to rewrite whole."""
     import json
     import os
-    import tempfile
 
     from pyspark.sql.types import (
         DoubleType,
@@ -1272,7 +1246,7 @@ def s10_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(f"{chunks}/chunk_*")
     )
 
-    table = tempfile.mkdtemp(prefix="sparkgraft_mergetable_")
+    table = run_output_dir("sparkgraft_mergetable_")
     manifest = os.path.join(table, "manifest.json")
     v0 = os.path.join(table, "v0")
     (
@@ -1732,7 +1706,6 @@ def s8_python_mq_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost, duplicated, or torn message fails the value hash."""
     import json
     import os
-    import tempfile
 
     from sparkstreaming_mq_spark.streaming.sources import (
         MQSinkDataSource,
@@ -1752,7 +1725,7 @@ def s8_python_mq_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("props").alias("value"),
         F.col("event_type").alias("htype"),
     )
-    broker = tempfile.mkdtemp(prefix="sparkgraft_broker_")
+    broker = run_output_dir("sparkgraft_broker_")
     env.write.format("mqsink").option("path", broker).mode("append").save()
     with open(os.path.join(broker, "_MANIFEST.json")) as f:
         manifest = json.load(f)
@@ -2503,15 +2476,14 @@ def s15_stream_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     of traffic and both stores stay partition-parallel; replaying a
     poisoned batch is a DLQ-side filter, never an ingest stall.
     """
-    import tempfile
 
     stream = read_events_stream_chunked(spark, sf_dir, n_chunks=4, order="time").select(
         "event_id",
         "event_type",
         F.get_json_object("props", "$.k").cast("bigint").alias("k"),
     )
-    main_store = tempfile.mkdtemp(prefix="sparkgraft_s15_main_")
-    dlq_store = tempfile.mkdtemp(prefix="sparkgraft_s15_dlq_")
+    main_store = run_output_dir("sparkgraft_s15_main_")
+    dlq_store = run_output_dir("sparkgraft_s15_dlq_")
 
     reason = (
         F.when(F.col("k").isNull(), F.lit("missing_k"))
@@ -2747,7 +2719,6 @@ def s17_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-oracle rules). At 100 TB this is how a sink proves
     exactly-once delivery against its source without a row-level diff:
     ship the 64-triple fingerprint, not the data."""
-    import tempfile
 
     from sparkstreaming_mq_spark.operators.audit import fingerprint_fold
     from sparkstreaming_mq_spark.streaming.sources import (
@@ -2769,7 +2740,7 @@ def s17_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("|"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").cast("string"),
     )
-    store = tempfile.mkdtemp(prefix="sparkgraft_fp_")
+    store = run_output_dir("sparkgraft_fp_")
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         # the ONE fingerprint recipe, shared with x4 (audit.py) — the
@@ -3469,9 +3440,8 @@ def cdc_upsert_run(
     comparison.
     """
     import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="sparkgraft_cdc_")
+    base = run_output_dir("sparkgraft_cdc_")
     # epoch -> {bucket_id: published dir for that bucket's current rows}
     manifests: dict[int, dict[int, str]] = {}
     stats: list[dict] = []

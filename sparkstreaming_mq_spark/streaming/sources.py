@@ -14,6 +14,7 @@ plays the role of ``maxOffsetsPerTrigger`` for bounded micro-batches.
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
 import shutil
@@ -299,6 +300,15 @@ class _stream_partitions:
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
+def run_output_dir(prefix: str) -> str:
+    """A fresh temp directory for a query's output that the returned
+    DataFrame reads lazily, so it cannot be removed when the query
+    returns; it is removed when the interpreter exits instead."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _await_then_drop_checkpoint(q, ckpt: str, owned: bool) -> None:
     """Wait for an AvailableNow query to drain, then delete its
     checkpoint directory if the caller did not supply it."""
@@ -343,8 +353,8 @@ def run_stream_to_table(
 def run_stream_to_parquet(stream_df: DataFrame, path: str | None = None) -> str:
     """S6 file sink: append-mode parquet delivery with checkpoint;
     returns the output path (the checkpoint is deleted once the run
-    ends)."""
-    path = path or tempfile.mkdtemp(prefix="sparkgraft_out_")
+    ends, an output directory made here at interpreter exit)."""
+    path = path or run_output_dir("sparkgraft_out_")
     ckpt = tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
     q = (
         stream_df.writeStream.format("parquet")

@@ -5,7 +5,12 @@ SURVEY.md §2 operator row inside that scored window."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from sparkstreaming_mq_spark import registry
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 # operator row -> queries that certify it; at least one must sit in the
 # scored window (mirrors the README coverage table).
@@ -176,12 +181,48 @@ def test_latest_driver_artifact_matches_priority():
     ever widens past 50 this fails — the signal to promote o9 and the
     tail full-oracle twins (t4c, j10c, s10b) into the window."""
     import json
-    import pathlib
 
-    root = pathlib.Path(__file__).resolve().parent.parent
-    arts = sorted(root.glob("CORRECTNESS_r*.json"))
+    arts = sorted(ROOT.glob("CORRECTNESS_r*.json"))
     if not arts:  # pragma: no cover - fresh clone without artifacts
         return
     with open(arts[-1]) as f:
         latest = json.load(f)
     assert tuple(latest.keys()) == registry.PRIORITY
+
+
+# module-level name lists that scripts run by query name
+NAME_LISTS = {
+    "bench.py": ("HEADLINE", "HEADLINE2", "HEADLINE3", "HEADLINE4", "HEADLINE5", "FRESH_SESSION"),
+    "scripts/dump_plans.py": ("HEADLINES",),
+    "scripts/scale_smoke.py": ("QUERIES",),
+    "scripts/skew_smoke.py": ("QUERIES",),
+}
+
+
+def _listed_names(path: pathlib.Path, targets: tuple[str, ...]) -> dict[str, list[str]]:
+    """The string elements (or dict keys) of each top-level assignment
+    in ``targets``, read from the source so no script runs."""
+    found = {}
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1:
+            name = getattr(node.targets[0], "id", None)
+            if name in targets:
+                v = node.value
+                elts = v.keys if isinstance(v, ast.Dict) else v.elts
+                found[name] = [ast.literal_eval(e) for e in elts]
+    return found
+
+
+def test_script_name_lists_are_registered():
+    """A stale query name in a bench or script list otherwise fails only
+    at run time, after minutes of work."""
+    from perfbench.workloads import WORKLOADS
+
+    qs = registry.all_queries()
+    lists = {f"perfbench:{w.name}": list(w.queries) for w in WORKLOADS.values()}
+    for rel, targets in NAME_LISTS.items():
+        found = _listed_names(ROOT / rel, targets)
+        assert set(found) == set(targets), f"{rel}: lists not found: {set(targets) - set(found)}"
+        lists.update({f"{rel}:{k}": v for k, v in found.items()})
+    stale = {k: [n for n in v if n not in qs] for k, v in lists.items()}
+    assert not any(stale.values()), f"unregistered query names: {stale}"

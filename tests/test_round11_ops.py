@@ -186,7 +186,7 @@ class TestJ18ProfilePath:
         want = {tuple(r) for r in without.collect()}
         assert got == want and got
 
-    def test_profile_plan_has_fewer_fact_scans(self, spark):
+    def test_profile_plan_has_fewer_fact_scans(self, spark, tmp_path):
         from sparkstreaming_mq_spark.operators.joins import (
             j18_hybrid_skew_join,
         )
@@ -214,9 +214,7 @@ class TestJ18ProfilePath:
         )
         # materialize the profile as a stats table would be: a tiny
         # standalone parquet, so the j18 plan reads IT, not lineitem
-        import tempfile
-
-        p = tempfile.mkdtemp(prefix="sparkgraft_statstbl_")
+        p = str(tmp_path / "statstbl")
         profile.write.mode("overwrite").parquet(p)
         stats_tbl = spark.read.parquet(p)
         pruned = j18_hybrid_skew_join(

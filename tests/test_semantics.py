@@ -14,19 +14,6 @@ registry.load_all()
 Q = registry.QUERIES
 
 
-def test_approx_count_distinct_bound(spark, sf_dir):
-    approx = {r.event_type: r.approx_users for r in Q["a4_approx_count_distinct"](spark, sf_dir).collect()}
-    exact = {
-        r.event_type: r.n
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    for k, n in exact.items():
-        assert abs(approx[k] - n) <= max(2, 0.05 * n), f"{k}: approx {approx[k]} vs {n}"
-
-
 def test_approx_percentile_bound(spark, sf_dir):
     approx = {r.l_returnflag: (r.p50, r.p90) for r in Q["a5b_approx_percentiles"](spark, sf_dir).collect()}
     exact = {r.l_returnflag: (r.p50, r.p90) for r in Q["a5_percentiles"](spark, sf_dir).collect()}
@@ -231,8 +218,16 @@ def test_ivf_recall_and_determinism(spark, sf_dir):
 
 
 def test_langid_deterministic(spark, sf_dir):
-    a = Q["l4e_langid"](spark, sf_dir).toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = Q["l4e_langid"](spark, sf_dir).toPandas().sort_values("doc_id").reset_index(drop=True)
+    def langs():
+        return (
+            Q["l4_text_metrics"](spark, sf_dir)
+            .select("doc_id", "pred_lang")
+            .toPandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+
+    a, b = langs(), langs()
     assert a.equals(b)
     assert set(a["pred_lang"]) <= {"und", *["en", "es", "de", "fr"]}
 
