@@ -46,6 +46,13 @@ def test_dim_join_broadcasts(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_topk_fuses(spark, sf_dir):
+    # ORDER BY + LIMIT lowers to a per-partition heap, never a range-partitioned global sort
+    plan = executed_plan(Q["o1_global_sort"](spark, sf_dir))
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+
 def test_projection_prunes_scan(spark, sf_dir):
     plan = formatted_plan(Q["f1_string_hash"](spark, sf_dir))
     m = re.search(r"ReadSchema: struct<([^>]*)", plan)
