@@ -58,7 +58,7 @@ def main() -> None:
     # pin the replay fixture exactly as streaming queries will see it
     # (skipped for dirs without events.parquet, e.g. docs-only corpora)
     try:
-        replay_dir = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+        replay_dir = chunked_events_dir(sf_dir, n_chunks=4, order="time")
         chunks = sorted(glob.glob(os.path.join(replay_dir, "chunk_*")))
         fixture = {
             "replay_dir": replay_dir,

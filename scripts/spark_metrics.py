@@ -78,6 +78,25 @@ def run_counted(df) -> tuple[int, str]:
     return n, qe.executedPlan().toString()
 
 
+def stream_metrics(progress: list[dict]) -> dict:
+    """Per-trigger attribution of one stream run from its
+    ``recentProgress``: trigger count, summed ``durationMs`` per phase
+    and the state operators' summed commit ms."""
+    phases: dict[str, int] = {}
+    for p in progress:
+        for phase, ms in p.get("durationMs", {}).items():
+            phases[phase] = phases.get(phase, 0) + ms
+    return {
+        "triggers": len(progress),
+        "duration_ms": phases,
+        "state_commit_ms": sum(
+            op.get("commitTimeMs", 0)
+            for p in progress
+            for op in p.get("stateOperators", [])
+        ),
+    }
+
+
 def measure(spark, make_df) -> dict:
     """Time ``run_counted(make_df())`` and attribute its stages.
 
@@ -85,12 +104,18 @@ def measure(spark, make_df) -> dict:
     is timed too: a stream query drains inside the query call and
     returns its memory-sink table. Returns wall seconds, rows, the
     executed plan's AQE skew markers and Python nodes, and the
-    ``diff_metrics`` of the stages the run completed."""
+    ``diff_metrics`` of the stages the run completed. When the thunk
+    ran a stream, its Python and state work runs in the micro-batches,
+    not in the executed (memory-sink scan) plan, so ``stream`` adds the
+    last run's ``stream_metrics``."""
+    from sparkstreaming_mq_spark.streaming import sources
+
+    progress_before = sources.LAST_PROGRESS
     before = stage_metrics(spark)
     t0 = time.time()
     n, plan = run_counted(make_df())
     wall = round(time.time() - t0, 3)
-    return {
+    out = {
         "wall_s": wall,
         "rows": n,
         "skew_joins": plan.count("skew=true"),
@@ -98,3 +123,6 @@ def measure(spark, make_df) -> dict:
         "python_nodes": sorted(set(re.findall(r"\b\w*(?:Python|InPandas|InArrow)\w*", plan))),
         **diff_metrics(before, stage_metrics(spark)),
     }
+    if sources.LAST_PROGRESS is not progress_before:
+        out["stream"] = stream_metrics(sources.LAST_PROGRESS)
+    return out

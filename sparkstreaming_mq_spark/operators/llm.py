@@ -1272,7 +1272,6 @@ def l53_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_TABLES = 8
 ANN_BITS = 8
-ANN_PROBE_RADIUS = 1  # also probe buckets within Hamming distance 1
 EMBED_DIM = 64
 
 

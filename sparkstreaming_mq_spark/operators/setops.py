@@ -307,7 +307,7 @@ def exact_ntile(df: DataFrame, n: int, order_cols: list[str]) -> DataFrame:
     (driver metadata), exact global rank = offset + local row_number,
     then ntile's bucket arithmetic (first N%n buckets take ⌈N/n⌉
     rows) on that rank. Two passes, every stage parallel. Used by the
-    streaming replay chunker and the equi-depth histogram (a16)."""
+    equi-depth histogram (a16)."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -425,9 +425,7 @@ def a16_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the textbook single-task NTILE window; the engine
     computes the IDENTICAL bucket membership with ``exact_ntile`` —
     range-partition + prefix-offset rank + ntile arithmetic — so every
-    stage is parallel (the same machinery that de-single-tasked the
-    streaming replay chunker, value-proven here by the cross-engine
-    hash). Stats are fixed-point cents; ties split deterministically
+    stage is parallel (value-proven here by the cross-engine hash). Stats are fixed-point cents; ties split deterministically
     by o_orderkey on both sides."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",

@@ -830,7 +830,7 @@ def s9_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunked_events_dir,
     )
 
-    chunks = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    chunks = chunked_events_dir(sf_dir, n_chunks=4, order="time")
     live = _tf.mkdtemp(prefix="sparkgraft_live_")
     out = run_output_dir("sparkgraft_recov_out_")
     ckpt = _tf.mkdtemp(prefix="sparkgraft_recov_ckpt_")
@@ -1485,7 +1485,7 @@ def s12_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(MQReplayDataSource)
     except Exception:
         pass  # already registered in this session
-    base = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = chunked_events_dir(sf_dir, n_chunks=4, order="time")
     env = spark.read.format("mqreplay").option("path", base).load()
     return (
         env.select(
@@ -1540,7 +1540,7 @@ def s12b_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(cls)
     except Exception:
         pass
-    base = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = chunked_events_dir(sf_dir, n_chunks=4, order="time")
     env = spark.readStream.format("mqreplay_stream").option("path", base).load()
     # fixed-point cents, not a per-row DECIMAL cast: value is an
     # arbitrary double, and Spark casts HALF_UP where DuckDB rounds
@@ -2662,7 +2662,7 @@ def s16_stream_seek_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkstreaming_mq_spark.session import apply_runtime_conf
 
     apply_runtime_conf(spark)
-    base = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = chunked_events_dir(sf_dir, n_chunks=4, order="time")
     # consume only chunks >= the seek position (glob char class)
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
@@ -3122,7 +3122,7 @@ def s12c_python_ds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.dataSource.register(MQPushdownDataSource)
         except Exception:
             pass  # already registered in this session
-        base = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+        base = chunked_events_dir(sf_dir, n_chunks=4, order="time")
         env = spark.read.format("mqreplay_pushdown").option("path", base).load()
         out = (
             env.filter(

@@ -4,7 +4,10 @@ The MQ ingestion path (SURVEY.md §2.1 S1/S2/S8) with an offline
 file-replay substitute: ``events.parquet`` replayed through Spark's
 file stream source — optionally split into ordered or interleaved
 chunk files so multi-micro-batch behavior (watermark advancement,
-late-data drops) is reproducible (SURVEY.md §5.3).
+late-data drops) is reproducible (SURVEY.md §5.3). The chunk files
+stand in for a queue's existing log, so they are built once per
+fixture generation in the driver: one Arrow read, sort and split
+(``_replay_chunks_dir``), no Spark job.
 
 Scale notes: the file source checkpoints file offsets exactly like the
 kafka source checkpoints partition offsets, so every downstream
@@ -15,6 +18,7 @@ plays the role of ``maxOffsetsPerTrigger`` for bounded micro-batches.
 from __future__ import annotations
 
 import atexit
+import json
 import math
 import os
 import shutil
@@ -22,7 +26,6 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -33,12 +36,12 @@ from pyspark.sql.types import (
 )
 
 from sparkstreaming_mq_spark.session import apply_runtime_conf
-from sparkstreaming_mq_spark.tables import cache_key, load_table, table_rowcount
+from sparkstreaming_mq_spark.tables import cache_key, load_table_arrow, table_rowcount
 
-# Schema of the materialized replay files: ``tables.load_table`` has
-# already converted the fixture's ns-long ts to a µs TimestampType
-# before the chunks are written, so the stream sees a proper
-# event-time column directly.
+# Schema of the materialized replay files: ``tables.load_table_arrow``
+# has already shaped the fixture's ts as a µs UTC timestamp before the
+# chunks are written, so the stream sees a proper event-time column
+# directly.
 EVENTS_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -51,93 +54,80 @@ EVENTS_STREAM_SCHEMA = StructType(
 )
 
 
-# Replay-cache version: bump whenever load_table's column shaping (e.g.
-# the ns→µs conversion) changes, so stale /tmp caches from an older code
+# Replay-cache version: bump whenever the chunks' column shaping
+# (``tables.load_table_arrow``, which mirrors ``load_table``; e.g. the
+# ns→µs conversion) changes, so stale /tmp caches from an older code
 # version can never feed a replay (a v1→v2 off-by-one-µs bite: the float
 # ns division fix made cached chunks disagree with fresh batch loads).
 # v3: events.ts normalized NTZ→LTZ (fixture regenerated as µs NTZ).
-# v5: parallel chunk builder — identical chunk MEMBERSHIP (exact ntile
-# arithmetic / pmod), but files are written by one partitioned job with
-# deterministic within-chunk (ts, event_id) row order and explicit
-# mtime spacing, replacing the single-task global window + per-chunk
-# coalesce(1) loop.
-# v6: within-chunk sort now leads with __chunk so the dynamic-partition
-# writer's own partition-column sort can't reorder equal-key rows via
-# spill-merge instability; same logical order on this data, but the
-# plan changed, so cached chunks must rebuild.
-_CACHE_VERSION = 6
+# v5, v6: chunks written by one partitioned Spark job (explicit mtime
+# spacing; v6 pinned the writer's within-chunk sort).
+# v7: chunks built in the driver with Arrow (``_replay_chunks_dir``)
+# instead of four Spark jobs; same rows per chunk in the same file
+# order, but ts is stored as µs UTC instead of Spark's INT96.
+_CACHE_VERSION = 7
 
 
-def _write_chunk_files(
-    df_with_chunk: DataFrame, out: str, n_chunks: int, sort_cols: list[str]
-) -> None:
-    """Materialize ``__chunk``-labelled rows as exactly one parquet
-    file per chunk, in ONE parallel job (the old builder looped
-    n_chunks filtered full scans, each coalesce(1)).
+def _replay_chunks_dir(
+    sf_dir: str,
+    name: str,
+    layout: str,
+    n_chunks: int,
+    sort_cols: list[str],
+    mod_col: str | None,
+) -> str:
+    """Materialize fixture table ``name`` as ``n_chunks`` replay files
+    ``chunk_k/part-00000.parquet`` under /tmp, cached per (fixture
+    generation, n, layout); returns the directory. Each file's rows are
+    in ascending ``sort_cols`` order, nulls first as Spark sorts
+    (replay order feeds the microbatch-mechanics oracles: t6/t8/t10,
+    full-replay dedup).
 
-    ``repartition(n_chunks, "__chunk")`` co-locates every chunk in a
-    single task (hash collisions merely give one task two chunks — the
-    partitionBy writer still emits one file per chunk value), the
-    partition-local sort pins within-file row order, and the writer
-    runs all chunks concurrently. The sort leads with ``__chunk``: the
-    dynamic-partition writer requires its output sorted by the
-    partition column and would otherwise insert its OWN sort on top,
-    leaving the ``sort_cols`` order to survive only via sorter
-    stability — which spill-merge at scale does not guarantee.
-    Sorting (``__chunk``, *sort_cols) satisfies the writer's
-    requirement in the child plan itself, so the within-file order is
-    plan-guaranteed (replay order feeds the microbatch-mechanics
-    oracles: t6/t8/t10, full-replay dedup).
-    File mtimes are then set explicitly,
-    spaced 10 s apart in chunk order — the file stream source replays
-    oldest-first, and an explicit clock is robust where write-order
-    mtimes (the old scheme) could collide at ms resolution.
+    Chunk k holds the rows whose ``mod_col`` is k mod ``n_chunks``
+    (``pmod``), or, with ``mod_col`` None, the k-th
+    ``ntile(n_chunks) OVER (ORDER BY sort_cols)``: the first N % n
+    chunks take ⌈N/n⌉ rows, the rest ⌊N/n⌋. No chunk may be empty:
+    an empty chunk would change the micro-batch count. File mtimes are
+    set 10 s apart in chunk order, since the file stream source replays
+    oldest-first and write-order mtimes could collide at ms resolution.
     """
-    import glob
-    import shutil
     import time
 
-    tmp = os.path.join(out, "_build")
-    (
-        df_with_chunk.repartition(n_chunks, "__chunk")
-        .sortWithinPartitions("__chunk", *sort_cols)
-        .write.partitionBy("__chunk")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    key = f"{cache_key(sf_dir, name)}_{n_chunks}_{layout}_v{_CACHE_VERSION}"
+    out = os.path.join(tempfile.gettempdir(), "sparkgraft_replay", key)
+    done = os.path.join(out, "_READY")
+    if os.path.exists(done):
+        return out
+    table = load_table_arrow(sf_dir, name)
+    keys = [(c, "ascending") for c in sort_cols]
+    table = table.take(pc.sort_indices(table, keys, null_placement="at_start"))
+    if mod_col is None:
+        small, n_big = divmod(table.num_rows, n_chunks)
+        sizes = [small + 1] * n_big + [small] * (n_chunks - n_big)
+        labels = np.repeat(np.arange(n_chunks), sizes)
+    else:
+        labels = np.mod(table.column(mod_col).to_numpy(), n_chunks)
     base_t = time.time()
     for k in range(n_chunks):
-        parts = sorted(glob.glob(os.path.join(tmp, f"__chunk={k}", "part-*")))
-        assert len(parts) == 1, (
-            f"chunk {k}: expected exactly one file, got {len(parts)} "
-            f"(empty chunks would change the micro-batch count)"
-        )
+        chunk = table.filter(labels == k)
+        if chunk.num_rows == 0:
+            raise ValueError(
+                f"replay chunk {k} of {n_chunks} is empty "
+                "(an empty chunk would change the micro-batch count)"
+            )
         chunk_dir = os.path.join(out, f"chunk_{k:03d}")
         os.makedirs(chunk_dir, exist_ok=True)
         # keep the part-*.parquet convention: the MQReplay Python
         # DataSource readers glob for it inside each chunk dir
         dst = os.path.join(chunk_dir, "part-00000.parquet")
-        os.replace(parts[0], dst)
+        pq.write_table(chunk, dst, store_schema=False)
         os.utime(dst, (base_t + 10 * k, base_t + 10 * k))
-    shutil.rmtree(tmp)
-
-
-def _exact_ntile_chunks(
-    events: DataFrame, n_chunks: int, spark: SparkSession
-) -> DataFrame:
-    """``__chunk`` = ntile(n_chunks) over (ts, event_id) — the exact
-    same chunk membership as ``F.ntile(n).over(Window.orderBy(...))``,
-    WITHOUT that window's empty partitionBy collapsing the corpus into
-    one task. Delegates to the generalized ``exact_ntile``
-    (operators/setops.py — the o16 prefix-offset recipe, also the
-    engine of the a16 equi-depth histogram where the membership parity
-    is cross-engine hash-proven)."""
-    from sparkstreaming_mq_spark.operators.setops import exact_ntile
-
-    return (
-        exact_ntile(events, n_chunks, ["ts", "event_id"])
-        .withColumnRenamed("__tile", "__chunk")
-    )
+    open(done, "w").close()
+    return out
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,42 +139,24 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events_stream_chunked(spark, sf_dir, n_chunks=1, order="time")
 
 
-def chunked_events_dir(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4, order: str = "time"
-) -> str:
+def chunked_events_dir(sf_dir: str, n_chunks: int = 4, order: str = "time") -> str:
     """Materialize events.parquet as ``n_chunks`` replay files under
     /tmp (cached per (sf, n, order)).
 
     order='time': chunk k holds the k-th time range → in-order replay,
     watermark advances monotonically between micro-batches.
-    order='hash': chunk k holds rows with hash(event_id)%n == k → every
-    chunk spans the full time range, so later chunks deliver events far
-    behind the watermark — the deterministic late-data scenario.
+    order='hash': chunk k holds the rows with event_id mod n == k →
+    every chunk spans the full time range, so later chunks deliver
+    events far behind the watermark — the deterministic late-data
+    scenario. event_id mod n, NOT a hash: the same full-time-range
+    interleave per chunk (ids are uncorrelated enough with ts), but
+    expressible in ANSI SQL, which is what lets t6's watermark-drop
+    replay carry a value-exact DuckDB oracle.
     """
-    key = f"{cache_key(sf_dir, 'events')}_{n_chunks}_{order}_v{_CACHE_VERSION}"
-    out = os.path.join(tempfile.gettempdir(), "sparkgraft_replay", key)
-    done = os.path.join(out, "_READY")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
-    events = load_table(spark, sf_dir, "events")
-    if n_chunks == 1:
-        ranked = events.withColumn("__chunk", F.lit(0))
-    elif order == "time":
-        # chunk by ts order, exact ntile membership computed in parallel
-        ranked = _exact_ntile_chunks(events, n_chunks, spark)
-    else:
-        # event_id % n, NOT a hash: same full-time-range interleave per
-        # chunk (ids are uncorrelated enough with ts), but expressible
-        # in ANSI SQL — which is what lets t6's watermark-drop replay
-        # carry a value-exact DuckDB oracle. xxhash64 would be
-        # Spark-only and force the slot back to rows-tier.
-        ranked = events.withColumn(
-            "__chunk", F.pmod(F.col("event_id"), F.lit(n_chunks))
-        )
-    _write_chunk_files(ranked, out, n_chunks, ["ts", "event_id"])
-    open(done, "w").close()
-    return out
+    mod_col = None if order == "time" else "event_id"
+    return _replay_chunks_dir(
+        sf_dir, "events", order, n_chunks, ["ts", "event_id"], mod_col
+    )
 
 
 def read_events_stream_chunked(
@@ -195,7 +167,7 @@ def read_events_stream_chunked(
 ) -> DataFrame:
     """Multi-micro-batch replay: one chunk file per trigger."""
     apply_runtime_conf(spark)
-    base = chunked_events_dir(spark, sf_dir, n_chunks, order)
+    base = chunked_events_dir(sf_dir, n_chunks, order)
     return (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .format("parquet")
@@ -219,19 +191,13 @@ def read_docs_stream_chunked(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> DataFrame:
     """Documents replayed as an incoming-crawl stream, one chunk file
-    per micro-batch (hash-partitioned by doc_id — arrival order is
-    irrelevant to the stateless decontamination join)."""
+    per micro-batch (chunk k holds doc_id mod n == k, ordered by doc_id
+    — arrival order is irrelevant to the stateless decontamination
+    join)."""
     apply_runtime_conf(spark)
-    key = f"{cache_key(sf_dir, 'documents')}_{n_chunks}_docs_v{_CACHE_VERSION}"
-    out = os.path.join(tempfile.gettempdir(), "sparkgraft_replay", key)
-    done = os.path.join(out, "_READY")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        docs = load_table(spark, sf_dir, "documents").withColumn(
-            "__chunk", F.pmod("doc_id", F.lit(n_chunks)).cast("int")
-        )
-        _write_chunk_files(docs, out, n_chunks, ["doc_id"])
-        open(done, "w").close()
+    out = _replay_chunks_dir(
+        sf_dir, "documents", "docs", n_chunks, ["doc_id"], "doc_id"
+    )
     return (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
         .format("parquet")
@@ -309,11 +275,21 @@ def run_output_dir(prefix: str) -> str:
     return path
 
 
+# ``recentProgress`` of the last stream run in this process, one dict
+# per trigger (``StreamingQueryProgress`` JSON), replaced by each run;
+# profiling reads it to attribute a stream query's triggers and state
+# commits.
+LAST_PROGRESS: list[dict] = []
+
+
 def _await_then_drop_checkpoint(q, ckpt: str, owned: bool) -> None:
-    """Wait for an AvailableNow query to drain, then delete its
-    checkpoint directory if the caller did not supply it."""
+    """Wait for an AvailableNow query to drain, keep its progress in
+    ``LAST_PROGRESS``, then delete its checkpoint directory if the
+    caller did not supply it."""
+    global LAST_PROGRESS
     try:
         q.awaitTermination()
+        LAST_PROGRESS = [json.loads(p.json) for p in q.recentProgress]
     finally:
         if owned:
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -333,7 +309,13 @@ def run_stream_to_table(
     checkpoint this function creates is deleted once the run ends.
     ``state_partitions`` overrides the tiny-state fixture profile for
     operators whose state work is input-sized (``input_sized_partitions``)
-    — None keeps the measured 2-partition local default."""
+    — None keeps the measured 2-partition local default.
+
+    The memory sink keeps the query's whole output on the driver, and
+    a job that scans the returned ``spark.table(name)`` ships those rows
+    to the executors inside its tasks: s21 at sf0.1 (94k output rows)
+    logs "task of very large size (1318 KiB)" for the stage of a
+    ``count()`` after the drain, and for none of the micro-batches."""
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = checkpoint or tempfile.mkdtemp(prefix="sparkgraft_ckpt_")
@@ -481,22 +463,18 @@ try:  # pyspark.sql.datasource exists in Spark 4; guard for older runtimes
 
             idx, chunk = partition.value
             for f in sorted(glob.glob(os.path.join(chunk, "part-*.parquet"))):
+                # the chunk files store ts as µs UTC, the precision
+                # Arrow interchange into Spark requires
                 t = pq.read_table(
                     f, columns=["event_id", "ts", "props"], filters=self._pq_filters()
                 )
                 n = t.num_rows
-                # Spark writes TimestampType as INT96 by default, which
-                # pyarrow surfaces as ns precision — Arrow interchange
-                # into Spark requires µs.
-                ts_us = pc.cast(
-                    t.column("ts"), pa.timestamp("us", tz="UTC")
-                ).combine_chunks()
                 yield pa.record_batch(
                     [
                         pa.array([self.topic] * n, pa.string()),
                         pa.array([idx] * n, pa.int32()),
                         t.column("event_id").combine_chunks(),
-                        ts_us,
+                        t.column("ts").combine_chunks(),
                         pc.cast(t.column("event_id"), pa.string()).combine_chunks(),
                         t.column("props").combine_chunks(),
                     ],
@@ -615,8 +593,6 @@ def make_mq_stream_datasource():
             import glob
             import os
 
-            import pyarrow as pa
-            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             chunks = self._chunks()
@@ -627,11 +603,10 @@ def make_mq_stream_datasource():
                     t = pq.read_table(
                         f, columns=["event_id", "ts", "event_type", "value"]
                     )
-                    ts = pc.cast(t.column("ts"), pa.timestamp("us", tz="UTC"))
                     yield from zip(
                         [i] * t.num_rows,
                         t.column("event_id").to_pylist(),
-                        ts.to_pylist(),
+                        t.column("ts").to_pylist(),
                         t.column("event_type").to_pylist(),
                         t.column("value").to_pylist(),
                     )

@@ -117,6 +117,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def load_table_arrow(sf_dir: str, name: str):
+    """``load_table``'s twin for driver-side builders: one fixture table
+    (a single file or a directory of part files) as a ``pyarrow.Table``,
+    with ``events.ts`` shaped by the same rule — a µs UTC timestamp,
+    ns-precision stamps divided by 1000 with truncation exactly as
+    ``ts div 1000`` does, NTZ stamps relabelled as UTC instants."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    t = ds.dataset(table_path(sf_dir, name), format="parquet").to_table()
+    t = t.replace_schema_metadata(None)
+    if name == "events":
+        ts = t.column("ts")
+        if ts.type.unit == "ns":
+            ts = pc.divide(ts.cast(pa.int64()), 1000)
+        i = t.schema.get_field_index("ts")
+        t = t.set_column(i, "ts", ts.cast(pa.timestamp("us", tz="UTC")))
+    return t
+
+
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
     """Register each fixture table as a temp view for spark.sql queries."""
     for name in names:

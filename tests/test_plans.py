@@ -371,7 +371,7 @@ def test_python_datasource_partitions_follow_queue_partitions(spark, sf_dir):
         spark.dataSource.register(MQReplayDataSource)
     except Exception:
         pass
-    base = chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = chunked_events_dir(sf_dir, n_chunks=4, order="time")
     env = spark.read.format("mqreplay").option("path", base).load()
     assert env.rdd.getNumPartitions() == 4
 
@@ -483,24 +483,6 @@ def test_incremental_dedup_window_reuses_join_partitioning(spark, sf_dir):
     # one exchange for the incoming side, one for the corpus side —
     # the window must NOT add a third
     assert plan.count("Exchange hashpartitioning") <= 2
-
-
-def test_replay_chunk_builder_has_no_single_task_stage(spark, sf_dir):
-    """The replay-cache builder (streaming/sources.py) must never
-    collapse the event log into one task: chunk membership is the o16
-    prefix-offset rank (window partitioned by pid), not an
-    empty-partitionBy ntile window, so the plan carries no
-    SinglePartition exchange. At 100× events the old global window was
-    the cold-path bottleneck of every streaming bench entry."""
-    from sparkstreaming_mq_spark.streaming import sources as S
-    from sparkstreaming_mq_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    ranked = S._exact_ntile_chunks(events, 4, spark)
-    plan = executed_plan(ranked)
-    assert "SinglePartition" not in plan, plan[:1200]
-    # membership window runs partitioned by pid, never unpartitioned
-    assert "Window" not in plan or "pid" in plan
 
 
 def test_o17_sample_is_scan_local(spark, sf_dir):

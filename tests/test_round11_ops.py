@@ -53,7 +53,7 @@ class TestCdcDeltaPrune:
         )
         upd.coalesce(1).write.parquet(c1)
         # chunk_000 must be delivered first: pin ascending mtimes the
-        # way _write_chunk_files does
+        # way the replay chunk builder does
         import time
 
         t0 = time.time()

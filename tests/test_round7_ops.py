@@ -370,7 +370,7 @@ def test_s12c_pushdown_reader_accepts_and_returns_filters(spark, sf_dir):
 
     from sparkstreaming_mq_spark.streaming import sources as S
 
-    base = S.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = S.chunked_events_dir(sf_dir, n_chunks=4, order="time")
     rdr = S._MQPushdownReader({"path": base})
     residue = rdr.pushFilters(
         [
@@ -410,7 +410,7 @@ def test_s12c_planner_schedules_one_partition(spark, sf_dir):
         spark.dataSource.register(S.MQPushdownDataSource)
     except Exception:
         pass
-    base = S.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = S.chunked_events_dir(sf_dir, n_chunks=4, order="time")
     env = (
         spark.read.format("mqreplay_pushdown")
         .option("path", base)
@@ -492,7 +492,7 @@ def test_s12c_no_match_partition_returns_empty(spark, sf_dir):
         spark.dataSource.register(S.MQPushdownDataSource)
     except Exception:
         pass
-    base = S.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    base = S.chunked_events_dir(sf_dir, n_chunks=4, order="time")
     env = spark.read.format("mqreplay_pushdown").option("path", base).load()
     assert env.filter(F.col("part_id") == 99).count() == 0
 

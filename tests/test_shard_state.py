@@ -240,7 +240,7 @@ def test_resumes_from_its_checkpoint(spark, sf_dir, monkeypatch, tmp_path, name,
     fn = getattr(queries, name)
     whole = fn(spark, sf_dir).toPandas()
 
-    chunks = sources.chunked_events_dir(spark, sf_dir, n_chunks=4, order="time")
+    chunks = sources.chunked_events_dir(sf_dir, n_chunks=4, order="time")
     names = sorted(n for n in os.listdir(chunks) if n.startswith("chunk_"))
     assert len(names) == 4
     live, ckpt = tmp_path / "live", str(tmp_path / "ckpt")

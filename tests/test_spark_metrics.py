@@ -68,3 +68,15 @@ def test_measure_runs_the_python_node(spark, sf_dir):
 
     rec = measure(spark, lambda: registry.all_queries()["u2_pandas_udf"](spark, sf_dir))
     assert "ArrowEvalPython" in rec["python_nodes"]
+
+
+def test_measure_reports_the_stream_triggers(spark, sf_dir):
+    """A stream query drains inside its call; measure attributes it
+    from the run's progress: s21 replays 4 chunks, one per trigger."""
+    from spark_metrics import measure
+
+    from sparkstreaming_mq_spark import registry
+
+    rec = measure(spark, lambda: registry.all_queries()["s21_stream_ewma"](spark, sf_dir))
+    assert rec["stream"]["triggers"] == 4
+    assert rec["stream"]["duration_ms"]["addBatch"] > 0
