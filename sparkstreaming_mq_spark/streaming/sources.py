@@ -124,7 +124,10 @@ def _replay_chunks_dir(
         # keep the part-*.parquet convention: the MQReplay Python
         # DataSource readers glob for it inside each chunk dir
         dst = os.path.join(chunk_dir, "part-00000.parquet")
-        pq.write_table(chunk, dst, store_schema=False)
+        # dictionary pages only pay for columns with repeats; all-distinct
+        # ones (event_id, value, doc text) are smaller PLAIN, as Spark writes them
+        repeated = [c for c in chunk.column_names if pc.count_distinct(chunk[c]).as_py() < chunk.num_rows]
+        pq.write_table(chunk, dst, store_schema=False, use_dictionary=repeated)
         os.utime(dst, (base_t + 10 * k, base_t + 10 * k))
     open(done, "w").close()
     return out

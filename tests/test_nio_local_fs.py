@@ -113,16 +113,19 @@ def test_missing_javac_keeps_stock_local_fs_with_one_warning(monkeypatch, tmp_pa
     shutil.copy(os.path.join(session._JVM_DIR, "NioLocalFs.java"), tmp_path)
     monkeypatch.setattr(session, "_JVM_DIR", str(tmp_path))
     monkeypatch.setattr(session.shutil, "which", lambda _name: None)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    session.jvm_cache_dir.cache_clear()
     session.nio_local_fs_jar.cache_clear()
     try:
         with caplog.at_level(logging.WARNING, logger=session.__name__):
             first = _built_conf(monkeypatch, master="local[2]")
             second = _built_conf(monkeypatch, master="local[2]")
     finally:
+        session.jvm_cache_dir.cache_clear()
         session.nio_local_fs_jar.cache_clear()
     for conf in (first, second):
         assert session.NIO_LOCAL_FS_KEY not in conf
         assert "spark.driver.extraClassPath" not in conf
     assert [r.levelno for r in caplog.records] == [logging.WARNING]
-    assert not (tmp_path / ".build").exists()
+    assert not list((tmp_path / "cache").rglob("*.jar"))
 
