@@ -2,7 +2,8 @@
 
 Every script that times a query or attributes its stages goes through
 ``measure(spark, make_df)``; this module is the only place that reads
-the Spark UI's REST status API (``/api/v1/applications/<id>/stages``).
+the Spark UI's REST status API (``/api/v1/applications/<id>/stages``
+and ``/jobs``).
 
 - ``stage_metrics(spark)``: one row per completed stage — tasks,
   executorRunTime / executorCpuTime, spill, shuffle and in/out bytes.
@@ -54,6 +55,14 @@ def stage_metrics(spark) -> dict:
     }
 
 
+def job_ids(spark) -> set[int]:
+    """Ids of every Spark job the application has started so far."""
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    with urllib.request.urlopen(url, timeout=30) as resp:
+        return {j["jobId"] for j in json.load(resp)}
+
+
 def diff_metrics(before: dict, after: dict) -> dict:
     """Attribution of the stages that completed between two snapshots:
     their totals, the top stages by run time and the spilling ones."""
@@ -103,24 +112,28 @@ def measure(spark, make_df) -> dict:
     ``make_df`` is a thunk so that work done while building the frame
     is timed too: a stream query drains inside the query call and
     returns its memory-sink table. Returns wall seconds, rows, the
-    executed plan's AQE skew markers and Python nodes, and the
-    ``diff_metrics`` of the stages the run completed. When the thunk
-    ran a stream, its Python and state work runs in the micro-batches,
-    not in the executed (memory-sink scan) plan, so ``stream`` adds the
-    last run's ``stream_metrics``."""
+    executed plan's AQE skew markers and Python nodes, the number of
+    Spark jobs the run started and the ``diff_metrics`` of the stages it
+    completed. When the thunk ran a stream, its Python and state work
+    runs in the micro-batches, not in the executed (memory-sink scan)
+    plan, so ``stream`` adds the last run's ``stream_metrics``."""
     from sparkstreaming_mq_spark.streaming import sources
 
     progress_before = sources.LAST_PROGRESS
+    jobs_before = job_ids(spark)
     before = stage_metrics(spark)
     t0 = time.time()
     n, plan = run_counted(make_df())
     wall = round(time.time() - t0, 3)
+    # the REST status store is filled from the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     out = {
         "wall_s": wall,
         "rows": n,
         "skew_joins": plan.count("skew=true"),
         "aqe_final": "isFinalPlan=true" in plan,
         "python_nodes": sorted(set(re.findall(r"\b\w*(?:Python|InPandas|InArrow)\w*", plan))),
+        "jobs": len(job_ids(spark) - jobs_before),
         **diff_metrics(before, stage_metrics(spark)),
     }
     if sources.LAST_PROGRESS is not progress_before:

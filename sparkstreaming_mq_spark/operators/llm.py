@@ -365,11 +365,13 @@ def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     emb_d = F.col("embedding").cast("array<double>")
-    q_rows = (
+    # bounded: < TOPK_QUERY_IDS rows by construction, so they are sorted
+    # here; an orderBy would add a range-sort sample job and an exchange
+    q_rows = sorted(
         e.filter(F.col("vec_id") < TOPK_QUERY_IDS)
         .select("vec_id", emb_d.alias("qe"))
-        .orderBy("vec_id")
-        .collect()  # bounded: < TOPK_QUERY_IDS rows by construction
+        .collect(),
+        key=lambda r: r["vec_id"],
     )
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype="int64")
     q_mat = np.array([r["qe"] for r in q_rows], dtype="float64")

@@ -4,14 +4,20 @@ Tables are the driver-generated TPC-H-ish star schema plus an ``events``
 stream table and the LLM-pipeline ``documents``/``embeddings`` tables
 (/root/repo/TESTDATA.md:13-15). All access is columnar parquet scans so
 Catalyst gets predicate pushdown + column pruning for free.
+
+``load_table`` caches each table's inferred schema, never a DataFrame:
+a plain ``spark.read.parquet`` starts a Spark job on every call only to
+read a footer.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sparkstreaming_mq_spark.session import apply_runtime_conf
 
@@ -70,8 +76,6 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     regenerated fixture never serves a stale count)."""
     key = f"{cache_key(sf_dir, name)}_{name}"
     if key not in _ROWCOUNT_CACHE:
-        import glob
-
         import pyarrow.parquet as pq
 
         path = table_path(sf_dir, name)
@@ -87,8 +91,36 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     return _ROWCOUNT_CACHE[key]
 
 
+# Session confs that change the schema Spark infers from a parquet file.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    path = os.path.abspath(path)
+    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
+    stats = tuple((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+    return (path, stats, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table.
+
+    The first read of a table infers its schema as Spark does (a
+    one-task job reading a footer); later reads pass that ``StructType``
+    and start no job. The cache is keyed by the path, the mtime and size
+    of the file (or of each part file) and, read after
+    ``apply_runtime_conf``, the confs that shape inference, so a
+    rewritten table or a session that infers differently is inferred
+    again. Each call still builds a new DataFrame: a shared one would
+    give two loads of a table the same attribute ids, and a self-join of
+    them could not tell its sides apart.
 
     ``events.ts`` is normalized to a µs session-zone ``TimestampType``
     regardless of the fixture generation's physical encoding — observed
@@ -101,7 +133,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     apply_runtime_conf(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    key = _schema_key(spark, path)
+    if key not in _SCHEMA_CACHE:
+        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -230,3 +230,12 @@ def test_dup_spans_consistent_with_dup_density(spark, sf_dir):
         g = spans[spans["doc_id"] == doc]
         assert len(g) == 1 and g.iloc[0]["tok_start"] == 0
         assert g.iloc[0]["tok_end"] == n_tok[doc] - 1
+
+
+def test_l3_collects_its_query_rows_in_one_job(spark, sf_dir, count_jobs):
+    """l3 sorts its bounded query rows on the driver: building the query
+    starts one Spark job, where an ``orderBy`` collect starts three (a
+    range-sort sample, the sort exchange and the collect)."""
+    load_table(spark, sf_dir, "embeddings")  # infers and caches the schema
+    jobs, _ = count_jobs(lambda: Q["l3_cosine_topk"](spark, sf_dir))
+    assert jobs == 1

@@ -79,11 +79,10 @@ def test_part_file_table_builds_same_chunks(sf_dir, tmp_path, monkeypatch):
     assert all(a.equals(b) for a, b in zip(split, single))
 
 
-@pytest.mark.parametrize("shape", ["ns", "us_ntz", "us_utc"])
-def test_arrow_ts_equals_load_table(spark, sf_dir, tmp_path, shape):
-    """``load_table_arrow`` shapes ``events.ts`` exactly as
-    ``load_table`` does, for each physical shape the fixture has been
-    seen in: INT64 TIMESTAMP(NANOS), TIMESTAMP(MICROS) NTZ and UTC."""
+def write_events(sf_dir, d, shape):
+    """Write ``sf_dir``'s events to ``d/events.parquet`` with ``ts`` in
+    one physical shape: ``ns`` INT64 TIMESTAMP(NANOS), ``us_ntz``
+    TIMESTAMP(MICROS) NTZ or ``us_utc`` TIMESTAMP(MICROS) UTC."""
     events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     us = events.column("ts").cast(pa.int64()).to_numpy()
     if shape == "ns":
@@ -94,14 +93,22 @@ def test_arrow_ts_equals_load_table(spark, sf_dir, tmp_path, shape):
         ts = pa.array(us, pa.timestamp("us"))
     else:
         ts = pa.array(us, pa.timestamp("us", tz="UTC"))
-    d = tmp_path / shape
-    d.mkdir()
     pq.write_table(
         events.set_column(events.schema.get_field_index("ts"), "ts", ts),
-        d / "events.parquet",
+        os.path.join(d, "events.parquet"),
         version="2.6",
         coerce_timestamps=None,
     )
+
+
+@pytest.mark.parametrize("shape", ["ns", "us_ntz", "us_utc"])
+def test_arrow_ts_equals_load_table(spark, sf_dir, tmp_path, shape):
+    """``load_table_arrow`` shapes ``events.ts`` exactly as
+    ``load_table`` does, for each physical shape the fixture has been
+    seen in: INT64 TIMESTAMP(NANOS), TIMESTAMP(MICROS) NTZ and UTC."""
+    d = tmp_path / shape
+    d.mkdir()
+    write_events(sf_dir, d, shape)
     t = load_table_arrow(str(d), "events")
     got = dict(zip(t.column("event_id").to_pylist(), t.column("ts").cast(pa.int64()).to_pylist()))
     want = dict(

@@ -209,6 +209,19 @@ def test_rerun_compiles_no_new_code(spark, sf_dir, name):
     assert _compiles(spark) - before == 0
 
 
+def test_third_s21_run_compiles_no_generated_class(spark, sf_dir):
+    """The driver's JIT threads stay busy on warm s21 passes, but not
+    through Janino: every generated class is compiled by the first run
+    (measurements/s21_warm_jit_probe.json)."""
+    from sparkstreaming_mq_spark.streaming import queries
+
+    for _ in range(2):
+        queries.s21_stream_ewma(spark, sf_dir)
+    before = _compiles(spark)
+    queries.s21_stream_ewma(spark, sf_dir)
+    assert _compiles(spark) - before == 0
+
+
 def _digest(pdf: pd.DataFrame) -> str:
     return hashlib.sha256(repr(canon_frame(pdf)).encode()).hexdigest()
 

@@ -59,6 +59,16 @@ def test_measure_counts_rows_and_new_stages(spark, sf_dir):
     assert rec["wall_s"] > 0
 
 
+def test_measure_counts_the_jobs_of_the_run(spark):
+    """``jobs`` counts every Spark job the run started, also those the
+    thunk ran while building its frame."""
+    from spark_metrics import measure
+
+    rec = measure(spark, lambda: (spark.range(5).collect(), spark.range(3))[1])
+    assert rec["rows"] == 3
+    assert rec["jobs"] == 2
+
+
 def test_measure_runs_the_python_node(spark, sf_dir):
     """``df.count()`` prunes a pandas UDF's column and with it the
     ArrowEvalPython node; measure must time the registered program."""
