@@ -116,9 +116,13 @@ def measure(spark, make_df) -> dict:
     Spark jobs the run started and the ``diff_metrics`` of the stages it
     completed. When the thunk ran a stream, its Python and state work
     runs in the micro-batches, not in the executed (memory-sink scan)
-    plan, so ``stream`` adds the last run's ``stream_metrics``."""
+    plan, so ``stream`` adds the last run's ``stream_metrics``. It first
+    waits for ``get_spark``'s Python warm-up job, which would otherwise
+    land in the diffs of a run started right after the session."""
+    from sparkstreaming_mq_spark.session import python_warm_up
     from sparkstreaming_mq_spark.streaming import sources
 
+    python_warm_up()
     progress_before = sources.LAST_PROGRESS
     jobs_before = job_ids(spark)
     before = stage_metrics(spark)

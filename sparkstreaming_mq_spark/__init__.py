@@ -11,8 +11,25 @@ Structured Streaming for unbounded inputs; Pandas UDFs only where built-in
 operators cannot express the semantics.
 """
 
-from sparkstreaming_mq_spark.session import get_spark
-from sparkstreaming_mq_spark.tables import TABLES, load_table, register_views
+import importlib
 
-__all__ = ["get_spark", "TABLES", "load_table", "register_views"]
+# The public API, imported on first use (PEP 562): the Python worker daemon
+# (``python -m sparkstreaming_mq_spark.pydaemon``) imports this package
+# first and must choose which pyspark to import before anything does.
+_EXPORTS = {
+    "get_spark": "session",
+    "TABLES": "tables",
+    "load_table": "tables",
+    "register_views": "tables",
+}
+
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value

@@ -212,7 +212,8 @@ def o16_global_rownum(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_pid = parted.withColumn("pid", F.spark_partition_id()).localCheckpoint(
         eager=True
     )
-    counts = with_pid.groupBy("pid").count().orderBy("pid").collect()
+    # one row per partition: sorted on the driver, not by a Spark sort
+    counts = sorted(with_pid.groupBy("pid").count().collect(), key=lambda r: r["pid"])
     offsets = {}
     running = 0
     for r in counts:
@@ -316,7 +317,7 @@ def exact_ntile(df: DataFrame, n: int, order_cols: list[str]) -> DataFrame:
     with_pid = parted.withColumn("pid", F.spark_partition_id()).localCheckpoint(
         eager=True
     )
-    counts = with_pid.groupBy("pid").count().orderBy("pid").collect()
+    counts = sorted(with_pid.groupBy("pid").count().collect(), key=lambda r: r["pid"])
     offsets: dict[int, int] = {}
     total = 0
     for r in counts:
@@ -365,9 +366,11 @@ def exact_ntile_grouped(
     with_pid = parted.withColumn("pid", F.spark_partition_id()).localCheckpoint(
         eager=True
     )
-    counts = (
-        with_pid.groupBy("pid", *group_cols).count().orderBy(*group_cols, "pid")
-    ).collect()  # driver-bounded: partitions × groups rows
+    # driver-bounded (partitions × groups rows), so sorted on the driver:
+    # by pid, which orders each group's rows for its running offsets
+    counts = sorted(
+        with_pid.groupBy("pid", *group_cols).count().collect(), key=lambda r: r["pid"]
+    )
     if not counts:  # empty input: no offsets to build (schema-stable result)
         return with_pid.withColumn("__tile", F.lit(0).cast("int")).drop("pid")
     offset_rows = []

@@ -29,6 +29,16 @@ maps the archive on its first session.
   directories, so ``SPARK_CONF_DIR`` points at an empty directory while
   the JVM starts, and only when it is unset and ``$SPARK_HOME/conf``
   holds nothing but ``*.template`` files.
+
+Python workers fork from ``pydaemon`` (``spark.python.daemon.module``),
+which imports the installed, byte-compiled pyspark instead of Spark's
+source-only ``pyspark.zip`` when their versions match. On local masters a
+new session also starts that daemon in the background: one 1-row
+``mapInPandas`` job (``python_warm_up``), so the ~1.5 s daemon start and
+the first worker's fork overlap the caller's set-up instead of its first
+Python query (a 1-row Python job 4 s after start: 2.4 s with neither
+change, 0.2-0.3 s with both, on 4 vCPUs). Sessions built outside
+``get_spark`` keep the stock daemon and get no warm-up.
 """
 
 from __future__ import annotations
@@ -44,6 +54,7 @@ import shutil
 import struct
 import subprocess
 import tempfile
+import threading
 import zipfile
 
 from pyspark import SparkContext
@@ -335,6 +346,40 @@ def _dump_archive(
                 os.remove(path)
 
 
+# Job group and description of the warm-up job (``python_warm_up``).
+WARM_UP_JOB = "sparkstreaming_mq_spark: start the Python worker daemon"
+_warm_up: threading.Thread | None = None
+
+
+def python_warm_up(spark: SparkSession | None = None) -> None:
+    """Own the Python-worker warm-up of a local ``get_spark`` session.
+
+    With ``spark``: start a daemon thread that runs one 1-row identity
+    ``mapInPandas`` job under the job group and description
+    ``WARM_UP_JOB``, so that Spark starts the worker daemon (~1.5 s) and
+    forks the first worker while the caller is still planning its first
+    query. The thread swallows every error: a session stopped mid-way
+    just ends it. Without ``spark``: wait until that thread is done
+    (return at once when none ran). Anything that diffs application-wide
+    job, stage or codegen counters calls this first, or it counts the
+    warm-up's job as its own."""
+    global _warm_up
+    if spark is None:
+        if _warm_up is not None:
+            _warm_up.join()
+        return
+
+    def run():
+        try:
+            spark.sparkContext.setJobGroup(WARM_UP_JOB, WARM_UP_JOB)
+            spark.range(1, numPartitions=1).mapInPandas(lambda batches: batches, "id long").collect()
+        except Exception:  # the session may stop at any point
+            pass
+
+    _warm_up = threading.Thread(target=run, name="python-warm-up", daemon=True)
+    _warm_up.start()
+
+
 def get_spark(
     app_name: str = "sparkstreaming-mq-spark",
     master: str | None = None,
@@ -378,17 +423,21 @@ def get_spark(
         conf["spark.driver.extraJavaOptions"] = " ".join(filter(None, (opts, cds[0])))
     for k, v in conf.items():
         builder = builder.config(k, v)
+    new_context = SparkContext._active_spark_context is None
     if cds is None:
-        return builder.getOrCreate()
-    _, empty_conf_dir, classlist, java = cds
-    os.environ["SPARK_CONF_DIR"] = empty_conf_dir  # read by the launcher only
-    try:
         spark = builder.getOrCreate()
-    finally:
-        del os.environ["SPARK_CONF_DIR"]
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if classlist is not None and proc is not None:
-        jvm = SparkContext._jvm
-        args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
-        atexit.register(_dump_archive, proc, java, args, jvm.System.getProperty("java.class.path"), classlist)
+    else:
+        _, empty_conf_dir, classlist, java = cds
+        os.environ["SPARK_CONF_DIR"] = empty_conf_dir  # read by the launcher only
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if classlist is not None and proc is not None:
+            jvm = SparkContext._jvm
+            args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+            atexit.register(_dump_archive, proc, java, args, jvm.System.getProperty("java.class.path"), classlist)
+    if new_context and master.startswith("local"):
+        python_warm_up(spark)
     return spark

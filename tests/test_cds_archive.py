@@ -128,7 +128,8 @@ class _Builder:
 def fake(monkeypatch, tmp_path):
     """get_spark with a fake builder, no running JVM, a temp cache dir
     and a temp Spark home whose conf dir holds only templates."""
-    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=None))
+    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=None, _active_spark_context=None))
+    monkeypatch.setattr(session, "python_warm_up", lambda spark: None)
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
@@ -229,7 +230,7 @@ def test_running_jvm_and_cluster_masters_are_untouched(fake, monkeypatch):
     assert conf["SPARK_CONF_DIR at launch"] is None
     assert not fake.jvm_dir.exists()
 
-    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=object()))
+    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=object(), _active_spark_context=None))
     conf = fake.build()
     assert "spark.driver.extraJavaOptions" not in conf
     assert conf["SPARK_CONF_DIR at launch"] is None

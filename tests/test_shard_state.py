@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkstreaming_mq_spark.oracle import canon_frame
+from sparkstreaming_mq_spark.session import python_warm_up
 from sparkstreaming_mq_spark.streaming.shard_state import (
     Combiner,
     hash_long,
@@ -181,6 +182,7 @@ def test_partition_shard_puts_one_label_in_each_partition(spark, n):
 
 
 def _compiles(spark) -> int:
+    python_warm_up()  # its job compiles classes of its own
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
